@@ -33,8 +33,13 @@ object JsonFlatten {
   * move.
   */
 object IngestJob {
+  /** One branch's outcome. `layerMs` holds the wall-clock ms of each
+    * layer of a loaded batch (`stage_ms`, `upsert_ms`, `refresh_ms`);
+    * it is empty for a failed branch.
+    */
   final case class BranchReport(scope: String, code: String,
-      rows: Long, error: Option[String]) {
+      rows: Long, error: Option[String],
+      layerMs: Seq[(String, Long)] = Nil) {
     def ok: Boolean = error.isEmpty
   }
 
@@ -44,24 +49,12 @@ object IngestJob {
     * throws (D4 error isolation).
     */
   def runBranch(spark: SparkSession, fetch: Fetcher, warehouseDir: String)(
-      scope: String, code: String): BranchReport = {
-    Try {
+      scope: String, code: String): BranchReport =
+    logged(scope, code)(Try {
       val table = Dv3fConfig.route(scope)
-      val wide = JsonFlatten.flattenResults(spark, fetch(scope, code))
-      val staged = Reshape.transform(wide, table)
-      val n = staged.count()
-      Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
-      Catalog.repointIfRegistered(spark, warehouseDir, table)
-      n
-    } match {
-      case Success(n) =>
-        val r = BranchReport(scope, code, n, None)
-        RunLog.branch(r); r
-      case Failure(e) =>
-        val r = BranchReport(scope, code, 0, Some(e.toString))
-        RunLog.branch(r); r
-    }
-  }
+      load(spark, warehouseDir, table)(
+        Reshape.transform(JsonFlatten.flattenResults(spark, fetch(scope, code)), table))
+    })
 
   /** Full run over the configured fan-out (D1/D2): sequential like the
     * reference's execute_in_process, but each branch is an independent
@@ -76,30 +69,58 @@ object IngestJob {
   /** The at-scale shape: ONE job through the DSv2 `dv3f` source (fetch
     * and flatten on executors, one InputPartition per (scope, code)),
     * then ONE upsert per target table instead of a table rewrite per
-    * branch. Error isolation moves down a level: a bad partition fails
-    * its table's batch, the other table still lands.
+    * branch. Each table's batch scans the source once: the row count
+    * and the merge both read the persisted batch (see [[load]]). Error
+    * isolation moves down a level: a bad partition fails its table's
+    * batch, the other table still lands.
     */
   def runViaSource(spark: SparkSession, payloadDir: String,
       warehouseDir: String): Seq[BranchReport] = {
     val longDf = spark.read.format("dv3f")
       .option("path", payloadDir).load()
     Dv3fConfig.staging.map { table =>
-      Try {
-        val staged = graft.sources.Dv3fSource.stage(longDf, table)
-        val n = staged.count()
-        if (n > 0) {
-          Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
-          Catalog.repointIfRegistered(spark, warehouseDir, table)
-        }
-        n
-      } match {
-        case Success(n) =>
-          val r = BranchReport(table.scope, "*", n, None)
-          RunLog.branch(r); r
-        case Failure(e) =>
-          val r = BranchReport(table.scope, "*", 0, Some(e.toString))
-          RunLog.branch(r); r
-      }
+      logged(table.scope, "*")(Try(
+        load(spark, warehouseDir, table)(graft.sources.Dv3fSource.stage(longDf, table))))
     }
+  }
+
+  /** Stage → upsert → catalog re-point for one table, computing the
+    * staged batch ONCE: it is persisted before its row count, so the
+    * count and both uses of the batch in the merge (the broadcast key
+    * side and the union side) read the cached rows instead of each
+    * re-running the scan and reshape. The cache lives through any
+    * commit-race retries of the upsert and is dropped in a `finally`,
+    * also when a layer throws. An empty batch commits nothing. Returns
+    * the row count and the per-layer ms for the branch's RunLog line;
+    * `stage_ms` covers building the batch (a driver-side fetch
+    * included) and materializing it.
+    */
+  private def load(spark: SparkSession, warehouseDir: String,
+      table: StagingTable)(stage: => DataFrame): (Long, Seq[(String, Long)]) = {
+    val t0 = System.nanoTime()
+    val staged = stage.persist()
+    try {
+      val n = staged.count()
+      val t1 = System.nanoTime()
+      if (n > 0)
+        Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
+      val t2 = System.nanoTime()
+      if (n > 0) Catalog.repointIfRegistered(spark, warehouseDir, table)
+      val t3 = System.nanoTime()
+      val ms = (a: Long, b: Long) => (b - a) / 1000000
+      (n, Seq("stage_ms" -> ms(t0, t1), "upsert_ms" -> ms(t1, t2),
+        "refresh_ms" -> ms(t2, t3)))
+    } finally staged.unpersist()
+  }
+
+  /** The branch's report, logged: never throws (D4 error isolation). */
+  private def logged(scope: String, code: String)(
+      result: Try[(Long, Seq[(String, Long)])]): BranchReport = {
+    val r = result match {
+      case Success((n, layerMs)) => BranchReport(scope, code, n, None, layerMs)
+      case Failure(e) => BranchReport(scope, code, 0, Some(e.toString))
+    }
+    RunLog.branch(r)
+    r
   }
 }

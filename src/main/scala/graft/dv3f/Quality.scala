@@ -1,13 +1,15 @@
 package graft.dv3f
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks — the dbt `unique` / `not_null` schema tests as
   * operators (reference: dbt_core/models/example/schema.yml:4-22).
   * Each returns the VIOLATION count (0 = pass) so callers can assert or
   * report. Both are single-pass aggregations — one shuffle for unique
-  * (by the checked column), none for notNull.
+  * (by the checked column), none for notNull. [[stagingChecks]] fuses
+  * a table's whole suite into ONE aggregation (one Spark action) rather
+  * than one action per check.
   */
 object Quality {
 
@@ -97,16 +99,34 @@ object Quality {
     * unique(uid) + not_null(uid) (+ not_null on every id var, which the
     * uid hash requires — SURVEY.md §7.4.4), plus the declared maxLength
     * constraints (config.yaml:22: annee maxLength 4).
+    *
+    * ONE aggregation answers the whole suite: group by the primary key
+    * once, counting per group its rows, its NULL id vars and its
+    * over-length values, then fold the groups into one row holding
+    * every violation count. The counts are exactly those of the
+    * single-check functions above: a key group with more than one row
+    * is a unique violation (the NULL-key group is not), and the NULL-key
+    * group's row count is the not_null(pk) violation count.
     */
   def stagingChecks(df: DataFrame, table: StagingTable): Seq[CheckResult] = {
     val pk = table.primaryKey
-    Seq(
-      CheckResult(table.name, pk, "unique", uniqueViolations(df, pk)),
-      CheckResult(table.name, pk, "not_null", notNullViolations(df, pk))
-    ) ++ table.idVars.map(c =>
-      CheckResult(table.name, c, "not_null", notNullViolations(df, c))
-    ) ++ table.maxLengths.toSeq.sortBy(_._1).map { case (c, n) =>
-      CheckResult(table.name, c, s"max_length_$n", maxLengthViolations(df, c, n))
-    }
+    val lengths = table.maxLengths.toSeq.sortBy(_._1)
+    // per-row violation flags, in the order of the returned results
+    val flags: Seq[Column] = table.idVars.map(c => col(c).isNull) ++
+      lengths.map { case (c, n) =>
+        col(c).isNotNull && length(col(c).cast("string")) > n }
+    val flagCounts = flags.indices.map(i => s"__f$i")
+    val groups = df.groupBy(col(pk).as("__pk")).agg(count(lit(1)).as("__n"),
+      flags.zip(flagCounts).map { case (f, name) => count(when(f, 1)).as(name) }: _*)
+    val total = (c: Column) => coalesce(sum(c), lit(0L))
+    val folded = groups.agg(
+      total(when(col("__pk").isNotNull && col("__n") > 1, 1L)),
+      total(when(col("__pk").isNull, col("__n"))) +:
+        flagCounts.map(c => total(col(c))): _*).head()
+    val checks = Seq((pk, "unique"), (pk, "not_null")) ++
+      table.idVars.map(_ -> "not_null") ++
+      lengths.map { case (c, n) => (c, s"max_length_$n") }
+    checks.zipWithIndex.map { case ((c, check), i) =>
+      CheckResult(table.name, c, check, folded.getLong(i)) }
   }
 }

@@ -24,7 +24,8 @@ object RunLog {
   private val log = LogManager.getLogger(LoggerName)
 
   /** One line per finished branch: stable key=value layout, status
-    * first so alert rules match on the prefix.
+    * first so alert rules match on the prefix. A loaded branch also
+    * carries its per-layer ms (`stage_ms`, `upsert_ms`, `refresh_ms`).
     */
   def branch(report: IngestJob.BranchReport): Unit = try branchImpl(report)
     catch { case _: Throwable => () } // logging must never fail the run
@@ -32,7 +33,8 @@ object RunLog {
   private def branchImpl(report: IngestJob.BranchReport): Unit = report.error match {
     case None =>
       log.info(s"status=ok scope=${report.scope} code=${report.code} " +
-        s"rows=${report.rows}")
+        s"rows=${report.rows}" +
+        report.layerMs.map { case (k, v) => s" $k=$v" }.mkString)
     case Some(err) =>
       log.error(s"status=error scope=${report.scope} code=${report.code} " +
         s"rows=${report.rows} err=${err.replace('\n', ' ')}")

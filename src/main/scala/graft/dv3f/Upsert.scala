@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Keyed, name-based upsert — the Spark equivalent of the reference's
   * `INSERT OR REPLACE INTO <t> BY NAME` (reference:
@@ -353,7 +354,7 @@ object Upsert {
         // partition column — markers are immutable, a second resolve
         // could observe a different commit
         val snap = parseSnapshot(content, targetPath, n)
-        if (snap.keySet == Set("")) spark.read.parquet(snap(""))
+        if (snap.keySet == Set("")) readUnpartitioned(spark, snap(""))
         else {
           // one branch per DISTINCT commit (bounded by vacuum), each a
           // partition-pruned scan of the partitions that commit still
@@ -387,18 +388,39 @@ object Upsert {
     * listing pass that inference needs runs once per dir, not once per
     * read — at the 100 TB design point that inference pass is an
     * object-store LIST/HEAD storm worth exactly one occurrence.
-    * Vacuumed dirs leave dead entries, bounded by commits seen per JVM.
+    * Unpartitioned writer-unique `_v_` dirs are cached too (keyed by the
+    * bare dir, see [[readUnpartitioned]]); each unpartitioned commit
+    * seeds its dir's entry with the schema it wrote, so reading a fresh
+    * snapshot runs no inference job at all. Vacuumed dirs leave dead
+    * entries, bounded by commits seen per JVM.
     */
   private val dirSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Read one unpartitioned snapshot dir. A writer-unique `_v_<n>_<token>`
+    * dir never changes once written, so its schema comes from
+    * [[dirSchemaCache]] and the read starts no Spark job. The flat
+    * pre-protocol root and legacy bare `_v_<n>` dirs (which racing
+    * writers of the old protocol could overwrite) can change in place
+    * and are inferred on every read.
+    */
+  private def readUnpartitioned(spark: SparkSession, dir: String): DataFrame =
+    if (!isWriterUnique(dir)) spark.read.parquet(dir)
+    else spark.read.schema(dirSchemaCache.computeIfAbsent(dir,
+      _ => spark.read.parquet(dir).schema)).parquet(dir)
+
+  private def isWriterUnique(dir: String): Boolean = {
+    val name = dir.substring(dir.lastIndexOf('/') + 1)
+    name.startsWith(VPrefix) &&
+      name.drop(VPrefix.length).dropWhile(_.isDigit).startsWith("_")
+  }
 
   private def scanPartitionAsString(spark: SparkSession, dir: String,
       pcol: String): DataFrame = {
     val sch = dirSchemaCache.computeIfAbsent(s"$dir#$pcol", _ => {
       val inferred = spark.read.parquet(dir).schema
-      org.apache.spark.sql.types.StructType(inferred.fields.map(f =>
-        if (f.name == pcol) f.copy(dataType = org.apache.spark.sql.types.StringType)
-        else f))
+      StructType(inferred.fields.map(f =>
+        if (f.name == pcol) f.copy(dataType = StringType) else f))
     })
     if (!sch.fieldNames.contains(pcol)) spark.read.parquet(dir)
     else spark.read.schema(sch).parquet(dir)
@@ -529,15 +551,8 @@ object Upsert {
     // published commit is base+1, so a commit landing in between makes
     // the marker rename collide (see the gapless-chain note above)
     val baseCommit = currentCommit(fs, target)
-    val existing = baseCommit.map(n =>
-      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
-      case Some(snap) => Some(spark.read.parquet(snap.getOrElse("",
-        throw new IllegalStateException(s"$targetPath was committed by the " +
-          "PARTITIONED upsert; use upsertByNamePartitioned/read on it"))))
-      case None if hasFlatData(fs, target) =>
-        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
-      case None => None
-    }
+    val existing = readBase(spark, fs, target, targetPath, baseCommit,
+      "use upsertByNamePartitioned/read on it")
     val merged = existing match {
       case None => aligned
       case Some(e) =>
@@ -551,10 +566,39 @@ object Upsert {
           .join(broadcast(aligned.select(key)), Seq(key), "left_anti")
           .unionByName(aligned)
     }
+    commitUnpartitioned(fs, target, targetPath, baseCommit, merged)
+  }
+
+  /** The base snapshot an unpartitioned commit merges onto: the live
+    * commit's dir, the flat pre-protocol layout adopted as version 0,
+    * or nothing for a new table. A partitioned snapshot is refused with
+    * `partitionedHint`.
+    */
+  private def readBase(spark: SparkSession, fs: FileSystem, target: Path,
+      targetPath: String, baseCommit: Option[Long],
+      partitionedHint: String): Option[DataFrame] =
+    baseCommit.map(n =>
+      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
+      case Some(snap) => Some(readUnpartitioned(spark, snap.getOrElse("",
+        throw new IllegalStateException(s"$targetPath was committed by the " +
+          s"PARTITIONED upsert; $partitionedHint"))))
+      case None if hasFlatData(fs, target) =>
+        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
+      case None => None
+    }
+
+  /** Write `merged` as commit base+1 to a fresh writer-unique dir, seed
+    * that dir's [[dirSchemaCache]] entry with the written schema
+    * (parquet reads every field back nullable), publish, vacuum.
+    */
+  private def commitUnpartitioned(fs: FileSystem, target: Path,
+      targetPath: String, baseCommit: Option[Long], merged: DataFrame): Unit = {
     val n = baseCommit.getOrElse(0L) + 1
     val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
+    val dir = s"${targetPath.stripSuffix("/")}/$dirName"
+    merged.write.mode(SaveMode.Overwrite).parquet(dir)
+    dirSchemaCache.put(dir,
+      StructType(merged.schema.fields.map(_.copy(nullable = true))))
     publish(fs, target, n, s"#dir:$dirName")
     vacuum(fs, target)
   }
@@ -594,15 +638,8 @@ object Upsert {
     requireAtomicRename(fs) // fail before the data write, not after
 
     val baseCommit = currentCommit(fs, target)
-    val existing = baseCommit.map(n =>
-      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
-      case Some(snap) => Some(spark.read.parquet(snap.getOrElse("",
-        throw new IllegalStateException(s"$targetPath was committed by the " +
-          "PARTITIONED upsert; mergeCdc supports unpartitioned tables"))))
-      case None if hasFlatData(fs, target) =>
-        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
-      case None => None
-    }
+    val existing = readBase(spark, fs, target, targetPath, baseCommit,
+      "mergeCdc supports unpartitioned tables")
     val base = existing match {
       case Some(e) => alignByName(e, table)
       case None => // empty base with the declared schema: I/U rows insert
@@ -610,12 +647,7 @@ object Upsert {
     }
     val merged = graft.ops.CdcMerge.applyLatestWins(
       base, alignedChanges, Seq(table.primaryKey), seqCol, opCol)
-    val n = baseCommit.getOrElse(0L) + 1
-    val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-    publish(fs, target, n, s"#dir:$dirName")
-    vacuum(fs, target)
+    commitUnpartitioned(fs, target, targetPath, baseCommit, merged)
   }
 
   /** Partitioned CDC MERGE — [[mergeCdc]]'s 100 TB shape: only the

@@ -2637,8 +2637,12 @@ object LlmOps {
     * bounded, the corpus is not — same scale argument as chunking/
     * packing); the chunk aggregate's collect_list state is bounded by
     * the expected chunk length (~16 tokens); the corpus-wide group-by
-    * keys on md5(chunk) — the only chunk identity the output reports —
-    * so the exchange never carries chunk text; exact int64 counts.
+    * keys on md5(chunk) and xxhash64(chunk), so the exchange never
+    * carries chunk text; exact int64 counts. Two distinct chunks that
+    * share an md5 (a crafted collision) still land in separate groups,
+    * since their xxhash64 differs; each group reports its md5 as
+    * `chunk_md5`. What remains assumed is that no two distinct chunks
+    * collide on md5 and xxhash64 at once.
     */
   def cdcChunkDedup(spark: SparkSession, dir: String): DataFrame = {
     // Chunking is computed WITHIN each row by higher-order array
@@ -2666,13 +2670,14 @@ object LlmOps {
     // length(content), and both are map-side computable — so the
     // corpus-wide group-by keys on the 32-char digest instead of the
     // full chunk string. The exchange and the aggregate hash map carry
-    // ~32 bytes per chunk instead of the whole content (the oracle
+    // ~40 bytes per chunk instead of the whole content (the oracle
     // still groups by content; equality is the hash gate's job).
     // n_chars is functionally determined by the key — min() reads it
     // deterministically without widening the partial state.
     chunks.select(md5(col("content")).as("chunk_md5"),
+        xxhash64(col("content")).as("chunk_xx"),
         length(col("content")).as("n_chars"), col("doc_id"))
-      .groupBy(col("chunk_md5"))
+      .groupBy(col("chunk_md5"), col("chunk_xx"))
       .agg(min(col("n_chars")).as("n_chars"),
         count(lit(1)).as("occurrences"), min(col("doc_id")).as("first_doc"))
       .filter(col("occurrences") > 1)

@@ -53,10 +53,12 @@ class IngestJobSpec extends SparkSpec {
     IngestJob.run(spark, fetch, wh,
       Seq(("departement", "85"), ("departement", "BAD")))
     val lines = scala.io.Source.fromFile(logFile).getLines().toSeq
-    // one success line with the branch key/values and the row count...
+    // one success line with the branch key/values, the row count and
+    // the per-layer ms...
     assert(lines.exists(l => l.contains("status=ok") &&
       l.contains("scope=departement") && l.contains("code=85") &&
-      l.contains("rows=1")), lines.mkString("\n"))
+      l.contains("rows=1") && Seq("stage_ms=", "upsert_ms=", "refresh_ms=")
+        .forall(l.contains)), lines.mkString("\n"))
     // ...and one error line carrying the branch and the cause
     assert(lines.exists(l => l.contains("status=error") &&
       l.contains("code=BAD") && l.contains("HTTP 503")), lines.mkString("\n"))

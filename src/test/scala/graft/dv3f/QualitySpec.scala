@@ -1,6 +1,7 @@
 package graft.dv3f
 
-import graft.SparkSpec
+import graft.{Listened, SparkSpec}
+import org.apache.spark.sql.DataFrame
 
 class QualitySpec extends SparkSpec {
   import spark.implicits._
@@ -60,5 +61,32 @@ class QualitySpec extends SparkSpec {
     val ml = checks.filter(_.check.startsWith("max_length"))
     assert(ml.map(c => (c.column, c.check)) == Seq(("annee", "max_length_4")))
     assert(ml.forall(_.passed))
+  }
+
+  test("stagingChecks: one Spark action, the same results as the single checks") {
+    import Quality.CheckResult
+    val table = Dv3fConfig.departement
+    val rows = Seq[(String, String, String, String)](
+      ("u1", "2019", "85", "Vendée"),
+      ("u1", "2019", "85", "Vendée"), // repeated uid
+      ("u2", "20190", "85", "Vendée"), // 5-character annee
+      (null, "2020", "44", "Loire-Atlantique"), // NULL uid
+      (null, null, null, "Loire-Atlantique"), // NULL uid and id vars
+      ("u3", "2021", null, null)) // NULL id vars
+    val df = Upsert.alignByName(rows.toDF("uid", "annee", "dep", "libdep"), table)
+    def singleChecks(frame: DataFrame): Seq[CheckResult] =
+      Seq(CheckResult(table.name, "uid", "unique", Quality.uniqueViolations(frame, "uid")),
+        CheckResult(table.name, "uid", "not_null", Quality.notNullViolations(frame, "uid"))) ++
+        table.idVars.map(c =>
+          CheckResult(table.name, c, "not_null", Quality.notNullViolations(frame, c))) :+
+        CheckResult(table.name, "annee", "max_length_4",
+          Quality.maxLengthViolations(frame, "annee", 4))
+    assert(singleChecks(df).map(_.violations) == Seq(1L, 2L, 1L, 2L, 1L, 1L))
+    for (frame <- Seq(df, df.limit(0))) {
+      val expected = singleChecks(frame)
+      val (got, counts) = Listened(spark)(Quality.stagingChecks(frame, table))
+      assert(got == expected)
+      assert(counts.actions == 1, counts)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.dv3f
 
-import graft.SparkSpec
+import graft.{Listened, SparkSpec}
 import graft.queries.Dv3fQueries
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -739,6 +739,27 @@ class UpsertSpec extends SparkSpec {
     fs.getConf.setBoolean(Upsert.AssumeAtomicRenameKey, true)
     Upsert.publish(fs, target, 1L, "#dir:_v_1_test")
     assert(fs.exists(new org.apache.hadoop.fs.Path(target, "_commit_1")))
+  }
+
+  test("an unpartitioned snapshot reads back with no Spark job, schema as inferred") {
+    val dir = freshDir()
+    Upsert.upsertByName(spark, dir, staged, Dv3fConfig.departement)
+    Upsert.upsertByName(spark, dir, staged, Dv3fConfig.departement)
+    val (df, counts) = Listened(spark)(Upsert.read(spark, dir))
+    assert(counts.jobs == 0, counts)
+    val live = Upsert.currentSnapshot(spark, dir).get("")
+    assert(df.schema == spark.read.parquet(live).schema)
+    assert(df.count() === 3)
+  }
+
+  test("a flat layout rewritten in place reads back its new column") {
+    val dir = freshDir()
+    staged.write.parquet(dir)
+    assert(!Upsert.read(spark, dir).columns.contains("extra"))
+    staged.withColumn("extra", lit("x")).write.mode("overwrite").parquet(dir)
+    val out = Upsert.read(spark, dir)
+    assert(out.columns.contains("extra"))
+    assert(out.filter(col("extra") === "x").count() === 3)
   }
 }
 

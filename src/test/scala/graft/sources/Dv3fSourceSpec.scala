@@ -5,7 +5,7 @@ import java.nio.file.Files
 
 import scala.collection.JavaConverters._
 
-import graft.SparkSpec
+import graft.{Listened, SparkSpec}
 import graft.dv3f.Dv3fConfig
 import graft.queries.Dv3fQueries
 
@@ -321,6 +321,34 @@ class Dv3fSourceSpec extends SparkSpec {
     assert(byScope("region").ok && byScope("region").rows == 1)
     assert(graft.dv3f.Upsert.read(spark, s"$wh/src_region").count() == 1)
     assert(!new File(s"$wh/src_departement").exists())
+  }
+
+  test("runViaSource scans each payload once and leaves nothing cached") {
+    val dir = Files.createTempDirectory("dv3fsrc10").toFile
+    val wh = Files.createTempDirectory("dv3fwh10").toFile.getAbsolutePath
+    writePayload(dir, "departement", "85",
+      """{"annee":"2019","dep":"85","libdep":"Vendée","nbtrans_cod111":7.0}""")
+    writePayload(dir, "departement", "44",
+      """{"annee":"2019","dep":"44","libdep":"L-A","nbtrans_cod111":8.0}""")
+    writePayload(dir, "region", "52",
+      """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0}""")
+    // the session is shared by every suite: compare with what was
+    // persisted before, not with an empty registry
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    // the first call creates both tables, the second merges onto them
+    for (_ <- 1 to 2) {
+      val (reports, counts) = Listened(spark)(
+        graft.dv3f.IngestJob.runViaSource(spark, dir.getAbsolutePath, wh))
+      assert(reports.forall(_.ok) && reports.map(_.rows).sum == 3)
+      assert(counts.sourceTasks == 3, counts) // one task per payload file
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    }
+    // a failing batch is unpersisted too
+    Files.writeString(new File(dir, "departement_85.json").toPath,
+      """{"count":0,"results":[]}""")
+    val reports = graft.dv3f.IngestJob.runViaSource(spark, dir.getAbsolutePath, wh)
+    assert(reports.map(_.ok) == Seq(false, true))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
   }
 
   test("scope equality filter prunes InputPartitions at planning time") {
