@@ -1,8 +1,14 @@
 package graft.dv3f
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** JSON payload flattening (S2): the API returns
   * `{count, next, previous, results: [...]}`; the relation is the
@@ -25,12 +31,11 @@ object JsonFlatten {
   * never kills the run, scripts/etl.py:26-55).
   *
   * `fetch` is pluggable (the reference hits
-  * https://apidf-preprod.cerema.fr; tests inject fixtures). Phase-1 shape:
-  * fetch on the driver per partition, transform/load distributed. At real
-  * scale the fetch belongs in a DataSource V2 reader with one
-  * InputPartition per (scope, code) so HTTP runs on executors — the
-  * transform/load below is already executor-side and unchanged by that
-  * move.
+  * https://apidf-preprod.cerema.fr; tests inject fixtures). [[run]] is
+  * the phase-1 shape: fetch on the driver per partition, transform/load
+  * distributed. [[runViaSource]] is the at-scale shape: the fetch runs
+  * on executors inside the DataSource V2 `dv3f` reader, and the
+  * transform/load is unchanged by that move.
   */
 object IngestJob {
   /** One branch's outcome. `layerMs` holds the wall-clock ms of each
@@ -45,6 +50,9 @@ object IngestJob {
 
   type Fetcher = (String, String) => String // (scope, code) => payload JSON
 
+  /** A loaded batch: its row count and per-layer ms. */
+  private type Loaded = (Long, Seq[(String, Long)])
+
   /** Run one branch: extract → transform → upsert. Returns a report, never
     * throws (D4 error isolation).
     */
@@ -57,31 +65,47 @@ object IngestJob {
     })
 
   /** Full run over the configured fan-out (D1/D2): sequential like the
-    * reference's execute_in_process, but each branch is an independent
-    * Spark job — trivially parallelizable with a .par collection or by
-    * unioning staged frames per target table before one upsert (fewer
-    * rewrites; preferred at scale).
+    * reference's execute_in_process, one driver-side fetch and one
+    * upsert per branch. [[runViaSource]] is the shape for scale.
     */
   def run(spark: SparkSession, fetch: Fetcher, warehouseDir: String,
       scopes: Seq[(String, String)] = Dv3fConfig.defaultScopes): Seq[BranchReport] =
     scopes.map { case (s, c) => runBranch(spark, fetch, warehouseDir)(s, c) }
 
-  /** The at-scale shape: ONE job through the DSv2 `dv3f` source (fetch
-    * and flatten on executors, one InputPartition per (scope, code)),
-    * then ONE upsert per target table instead of a table rewrite per
-    * branch. Each table's batch scans the source once: the row count
-    * and the merge both read the persisted batch (see [[load]]). Error
-    * isolation moves down a level: a bad partition fails its table's
-    * batch, the other table still lands.
+  /** The at-scale shape: the DSv2 `dv3f` source fetches and flattens
+    * the payloads on executors, its (scope, code) pairs packed into at
+    * most `defaultParallelism` scan tasks per table, then ONE upsert per
+    * target table instead of a table rewrite per branch (see
+    * [[loadStaging]]). Error isolation moves down a level: a bad
+    * partition fails its table's batch, the other table still lands.
     */
   def runViaSource(spark: SparkSession, payloadDir: String,
+      warehouseDir: String): Seq[BranchReport] =
+    loadStaging(spark,
+      spark.read.format("dv3f").option("path", payloadDir).load(), warehouseDir)
+
+  /** Stage and [[load]] every table of `Dv3fConfig.staging` from one
+    * long-shaped `dv3f` frame, the tables side by side: each runs on a
+    * thread this call starts, so it inherits the caller's Spark local
+    * properties (job group, description, scheduler pool, tags), and the
+    * call joins both before it returns. Each table's batch scans the
+    * source once. One report per table, logged and returned in staging
+    * order; a table's failure is its own report.
+    */
+  private[graft] def loadStaging(spark: SparkSession, longDf: DataFrame,
       warehouseDir: String): Seq[BranchReport] = {
-    val longDf = spark.read.format("dv3f")
-      .option("path", payloadDir).load()
-    Dv3fConfig.staging.map { table =>
-      logged(table.scope, "*")(Try(
-        load(spark, warehouseDir, table)(graft.sources.Dv3fSource.stage(longDf, table))))
-    }
+    val tables = Dv3fConfig.staging
+    val pool = Executors.newFixedThreadPool(tables.size)
+    try {
+      val done = pool.invokeAll(tables.map { table =>
+        (() => Try(load(spark, warehouseDir, table)(
+          graft.sources.Dv3fSource.stage(longDf, table)))): Callable[Try[Loaded]]
+      }.asJava).asScala
+      tables.zip(done).map { case (table, f) =>
+        logged(table.scope, "*")(
+          try f.get() catch { case e: ExecutionException => throw e.getCause })
+      }
+    } finally pool.shutdown()
   }
 
   /** Stage → upsert → catalog re-point for one table, computing the
@@ -90,20 +114,25 @@ object IngestJob {
     * side and the union side) read the cached rows instead of each
     * re-running the scan and reshape. The cache lives through any
     * commit-race retries of the upsert and is dropped in a `finally`,
-    * also when a layer throws. An empty batch commits nothing. Returns
-    * the row count and the per-layer ms for the branch's RunLog line;
-    * `stage_ms` covers building the batch (a driver-side fetch
-    * included) and materializing it.
+    * also when a layer throws. An empty batch commits nothing. The
+    * upsert reads the batch [[sizedToCache]]: Spark does not coalesce a
+    * cached plan's output, so the batch would otherwise keep
+    * `spark.sql.shuffle.partitions` partitions and a small commit would
+    * write one file per partition. Returns the row count and the
+    * per-layer ms for the branch's RunLog line; `stage_ms` covers
+    * building the batch (a driver-side fetch included) and
+    * materializing it.
     */
   private def load(spark: SparkSession, warehouseDir: String,
-      table: StagingTable)(stage: => DataFrame): (Long, Seq[(String, Long)]) = {
+      table: StagingTable)(stage: => DataFrame): Loaded = {
     val t0 = System.nanoTime()
     val staged = stage.persist()
     try {
       val n = staged.count()
       val t1 = System.nanoTime()
       if (n > 0)
-        Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
+        Upsert.upsertByName(spark, s"$warehouseDir/${table.name}",
+          sizedToCache(spark, staged), table)
       val t2 = System.nanoTime()
       if (n > 0) Catalog.repointIfRegistered(spark, warehouseDir, table)
       val t3 = System.nanoTime()
@@ -113,9 +142,20 @@ object IngestJob {
     } finally staged.unpersist()
   }
 
+  /** A materialized cached batch coalesced to ceil(cached bytes /
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) partitions; the
+    * batch as it is when it is not cached.
+    */
+  private def sizedToCache(spark: SparkSession, cached: DataFrame): DataFrame =
+    spark.sharedState.cacheManager.lookupCachedData(castToImpl(cached)).fold(cached) { c =>
+      val bytes = c.cachedRepresentation.computeStats().sizeInBytes
+      val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      cached.coalesce(((bytes + advisory - 1) / advisory).max(1).toInt)
+    }
+
   /** The branch's report, logged: never throws (D4 error isolation). */
   private def logged(scope: String, code: String)(
-      result: Try[(Long, Seq[(String, Long)])]): BranchReport = {
+      result: Try[Loaded]): BranchReport = {
     val r = result match {
       case Success((n, layerMs)) => BranchReport(scope, code, n, None, layerMs)
       case Failure(e) => BranchReport(scope, code, 0, Some(e.toString))

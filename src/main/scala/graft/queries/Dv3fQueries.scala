@@ -80,10 +80,10 @@ object Dv3fQueries {
 
   /** S1 phase 2 — the SAME flagship pipeline, but entering through the
     * DataSource V2 `format("dv3f")` reader: the fixture payload is
-    * serialized to an API-shaped JSON file, read back with one
-    * InputPartition per (scope, code) (fetch+flatten on executors), then
-    * staged. Oracle-identical to q_dv3f_pipeline — which is the point:
-    * the source is a drop-in scan.
+    * serialized to an API-shaped JSON file, read back with its (scope,
+    * code) pairs packed into core-sized InputPartitions (fetch+flatten
+    * on executors), then staged. Oracle-identical to q_dv3f_pipeline —
+    * which is the point: the source is a drop-in scan.
     */
   /** The FIXTURES wide payload serialized as an API-shaped JSON dir for
     * the dv3f source (one departement_85 partition).

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.collection.JavaConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -23,9 +23,11 @@ import graft.dv3f.{Reshape, StagingTable}
 /** DataSource V2 reader for the DV3F API shape (SURVEY.md §2.1 S1,
   * phase 2): `spark.read.format("dv3f").option("path", dir).load()`.
   *
-  * One InputPartition per (scope, code) — the reference's 119-way Dagster
-  * fan-out (scripts/etl.py:13-22) becomes Spark task parallelism, and the
-  * payload fetch+flatten runs ON EXECUTORS, not the driver. Payloads are
+  * The reference's 119-way Dagster fan-out over (scope, code) pairs
+  * (scripts/etl.py:13-22) becomes Spark task parallelism sized to the
+  * cores: the planned pairs are packed, in order, into at most
+  * `defaultParallelism` InputPartitions, and the payload fetch+flatten
+  * runs ON EXECUTORS, not the driver. Payloads are
   * `{count, next, previous, results:[...]}` JSON files named
   * `<scope>_<code>.json` under `path` — the fetch boundary is the
   * pluggable [[PageFetcher]] (default: file-backed), so a real
@@ -194,7 +196,7 @@ case class Dv3fMin(colName: String) extends Dv3fAgg
 case class Dv3fMax(colName: String) extends Dv3fAgg
 
 /** Filter pushdown (SupportsPushDownFilters): equality predicates on the
-  * PARTITION COLUMNS (scope, code) prune InputPartitions at planning
+  * PARTITION COLUMNS (scope, code) prune the planned pairs at planning
   * time — a `scope = 'region'` query never fetches departement payloads,
   * and one scope's bad payload cannot fail another scope's job. All
   * filters are also left as residuals for Spark to re-apply (safe
@@ -223,15 +225,15 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
     (scopeEq.map(v => EqualTo("scope", v): Filter) ++
       codeEq.map(v => EqualTo("code", v): Filter)).toArray
 
-  /** Limit pushdown (SupportsPushDownLimit): each partition reader
+  /** Limit pushdown (SupportsPushDownLimit): each (scope, code) reader
     * caps its output at `limit` rows, which — because pages are
     * fetched LAZILY, one `next` follow per drained page — stops the
     * HTTP page chain as soon as the cap is met: a `LIMIT 10` probe
-    * against a deep paginated endpoint costs one page per partition,
-    * not the full drain. Returning false keeps Spark's own global
-    * LIMIT as the residual (per-partition caps alone cannot implement
-    * a global limit across partitions), so this is a pure fetch-cost
-    * optimization with unchanged semantics.
+    * against a deep paginated endpoint costs at most one page per
+    * (scope, code), not the full drain. Returning false keeps Spark's
+    * own global LIMIT as the residual (per-reader caps alone cannot
+    * implement a global limit across partitions), so this is a pure
+    * fetch-cost optimization with unchanged semantics.
     */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
 
@@ -245,7 +247,7 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
     * COUNT(col)/MIN(valeur)/MAX(valeur) grouped by any source columns
     * run INSIDE the partition reader, against the still-paginating
     * page chain — so for a REST-backed deployment only |groups| rows
-    * per (scope, code) ever leave the edge, instead of every flattened
+    * per scan task ever leave the edge, instead of every flattened
     * metric row crossing into the exchange. Pushdown is PARTIAL
     * (supportCompletePushDown stays false): Spark plans the final
     * merge over the scan output, which makes per-partition
@@ -344,9 +346,13 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
       s"columns=[${required.fieldNames.mkString(", ")}] " +
       s"runtimeFilters=[scope, code]"
 
-  /** Planning: explicit `scopes` option ("departement:85,region:11") or
-    * one partition per payload file found under `path`, minus the
-    * partitions excluded by pushed-down scope/code equality filters.
+  /** Planning: the (scope, code) pairs of the explicit `scopes` option
+    * ("departement:85,region:11") or of the payload files found under
+    * `path`, sorted, minus the pairs excluded by pushed-down scope/code
+    * equality filters and runtime filters. The remaining pairs are
+    * packed in order into at most `defaultParallelism` partitions of
+    * near-equal pair counts: a payload is a few hundred cells, so one
+    * task per payload would spend most of its time on per-task cost.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val scopes: Seq[(String, String)] = options.get("scopes") match {
@@ -365,12 +371,14 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
           if (i <= 0) None else Some((base.substring(0, i), base.substring(i + 1)))
         }
     }
-    scopes
-      .filter { case (s, c) =>
-        scopeEq.forall(_ == s) && codeEq.forall(_ == c) &&
-          runtimeScopes.forall(_.contains(s)) && runtimeCodes.forall(_.contains(c))
-      }
-      .map { case (s, c) => Dv3fPartition(s, c): InputPartition }.toArray
+    val pairs = scopes.filter { case (s, c) =>
+      scopeEq.forall(_ == s) && codeEq.forall(_ == c) &&
+        runtimeScopes.forall(_.contains(s)) && runtimeCodes.forall(_.contains(c))
+    }
+    val n = pairs.size
+    val k = math.min(n, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](k)(i =>
+      Dv3fPartition(pairs.slice(i * n / k, (i + 1) * n / k)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -393,36 +401,55 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
   }
 }
 
-case class Dv3fPartition(scope: String, code: String) extends InputPartition
+/** One scan task's (scope, code) pairs, in planning order. */
+case class Dv3fPartition(pairs: Seq[(String, String)]) extends InputPartition
 
 class Dv3fReaderFactory(fetcher: PageFetcher, required: StructType,
     limit: Option[Int] = None,
     pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[Dv3fPartition]
+    val pairs = partition.asInstanceOf[Dv3fPartition].pairs
+    // one reader per pair, each opened only when the previous one is
+    // drained: every pair keeps its own page chain, visited set and limit
+    def chain(schema: StructType, cap: Option[Int]) = new Dv3fChainReader(
+      pairs.iterator.map { case (s, c) => new Dv3fPartitionReader(fetcher, s, c, schema, cap) })
     pushedAgg match {
       case Some((groups, aggs)) =>
-        // aggregate over the FULL long schema; the page chain still
-        // streams (rows are folded into the group map as pages drain)
-        new Dv3fAggPartitionReader(
-          new Dv3fPartitionReader(fetcher, p.scope, p.code, Dv3fSource.schema),
-          groups, aggs)
-      case None =>
-        new Dv3fPartitionReader(fetcher, p.scope, p.code, required, limit)
+        // aggregate over the FULL long schema; the page chains still
+        // stream (rows are folded into the group map as pages drain)
+        new Dv3fAggPartitionReader(chain(Dv3fSource.schema, None), groups, aggs)
+      case None => chain(required, limit)
     }
   }
 }
 
-/** Executor-side partial aggregation over one (scope, code) partition's
-  * long rows — the edge half of a pushed-down Spark aggregation. Rows
-  * are folded into a group map AS PAGES DRAIN (nothing buffers beyond
-  * |groups| states), then one row per group is emitted in encounter
-  * order. Spark's final aggregate merges these partials, so semantics
-  * are exactly the unpushed plan's; the win is that only |groups| rows
-  * per partition cross from the fetch edge into the exchange.
+/** The rows of several readers, one reader after the other. */
+class Dv3fChainReader(readers: Iterator[PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
+  private var current: PartitionReader[InternalRow] = _
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      close()
+      if (!readers.hasNext) return false
+      current = readers.next()
+    }
+    true
+  }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = if (current != null) { current.close(); current = null }
+}
+
+/** Executor-side partial aggregation over one scan task's long rows,
+  * across all of its (scope, code) pairs — the edge half of a
+  * pushed-down Spark aggregation. Rows are folded into a group map AS
+  * PAGES DRAIN (nothing buffers beyond |groups| states), then one row
+  * per group is emitted in encounter order. Spark's final aggregate merges these partials, so semantics
+  * are exactly the unpushed plan's, whichever pairs share a task; the
+  * win is that only |groups| rows per task cross from the fetch edge
+  * into the exchange.
   */
-class Dv3fAggPartitionReader(inner: Dv3fPartitionReader,
+class Dv3fAggPartitionReader(inner: PartitionReader[InternalRow],
     groups: Seq[String], aggs: Seq[Dv3fAgg])
     extends PartitionReader[InternalRow] {
   private val full = Dv3fSource.schema
@@ -501,7 +528,7 @@ class Dv3fAggPartitionReader(inner: Dv3fPartitionReader,
   * equivalent) and melted to long rows on the fly — no driver
   * involvement, no per-row allocation beyond the emitted InternalRow.
   * The payload's `next` locator (extract_load.py:81-91) is FOLLOWED:
-  * all pages of one (scope, code) concatenate within this partition,
+  * all pages of one (scope, code) concatenate within this reader,
   * lazily (a page is only fetched when the previous one is drained). A
   * visited set guards against locator cycles, seeded with the FETCHER's
   * own first-page locator so a `next` pointing back at page 1

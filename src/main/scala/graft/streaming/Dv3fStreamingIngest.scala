@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.dv3f.{Dv3fConfig, Upsert}
-import graft.sources.Dv3fSource
+import graft.dv3f.IngestJob
 
 /** Streaming face of the DV3F ingest: watch a payload directory; each
   * new `<scope>_<code>.json` API payload becomes part of the next
@@ -18,9 +17,13 @@ import graft.sources.Dv3fSource
   * Mechanics: a file stream discovers payload paths (checkpointed file
   * index = at-least-once delivery of new files); foreachBatch turns the
   * batch's file names into a `scopes` list and runs the batch DSv2
-  * reader restricted to exactly those partitions, then one upsert per
-  * staging table. The payload body is read by the DSv2 reader, not the
-  * file stream — the stream only carries discovery.
+  * reader restricted to exactly those partitions through the batch
+  * ingest's per-table load (`IngestJob.loadStaging`): each table's
+  * batch is read once, persisted, counted, upserted, re-pointed in the
+  * catalog and unpersisted, with one RunLog line per table. The
+  * payload body is read by the DSv2 reader, not the file stream — the
+  * stream only carries discovery. A failed table fails the micro-batch
+  * (so the stream replays it) after the other table has landed.
   */
 object Dv3fStreamingIngest {
 
@@ -52,16 +55,9 @@ object Dv3fStreamingIngest {
             .option("path", payloadDir)
             .option("scopes", scopes.mkString(","))
             .load()
-          Dv3fConfig.staging.foreach { table =>
-            val staged = Dv3fSource.stage(longDf, table)
-            if (!staged.isEmpty) {
-              Upsert.upsertByName(spark,
-                s"$warehouseDir/${table.name}", staged, table)
-              // keep registered dev.* locations on the live snapshot
-              // (vacuum retains only keepCommits of them)
-              graft.dv3f.Catalog.repointIfRegistered(spark, warehouseDir, table)
-            }
-          }
+          val failed = IngestJob.loadStaging(spark, longDf, warehouseDir).filterNot(_.ok)
+          if (failed.nonEmpty)
+            throw new IllegalStateException(s"dv3f micro-batch failed: ${failed.mkString("; ")}")
         }
         ()
       }

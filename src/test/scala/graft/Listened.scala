@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.SpecListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
@@ -11,13 +11,15 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts what a block makes Spark do: Dataset actions (one
-  * QueryExecutionListener callback each), jobs, and tasks of stages that
-  * scan a DataSource V2 source (`DataSourceRDD` in the stage's lineage).
-  * Jobs and stages count only when submitted by the calling thread, so
-  * work started elsewhere in the shared session does not leak in.
+  * QueryExecutionListener callback each), jobs, and the records read by
+  * tasks of stages that scan a DataSource V2 source (`DataSourceRDD` in
+  * the stage's lineage). Jobs and stages count only when submitted by
+  * the calling thread or a thread it started (local properties are
+  * inherited), so work started elsewhere in the shared session does not
+  * leak in.
   */
 object Listened {
-  final case class Counts(actions: Int, jobs: Int, sourceTasks: Int)
+  final case class Counts(actions: Int, jobs: Int, sourceRows: Long)
 
   private val TagKey = "graft.spec.listened"
 
@@ -26,7 +28,8 @@ object Listened {
     val tag = java.util.UUID.randomUUID.toString
     val tagged = (p: java.util.Properties) =>
       p != null && p.getProperty(TagKey) == tag
-    val actions, jobs, sourceTasks = new AtomicInteger
+    val actions, jobs = new AtomicInteger
+    val sourceRows = new AtomicLong
     val sourceStages = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -36,7 +39,8 @@ object Listened {
           e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
           sourceStages.add(e.stageInfo.stageId)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (sourceStages.contains(e.stageId)) sourceTasks.incrementAndGet()
+        if (sourceStages.contains(e.stageId) && e.taskMetrics != null)
+          sourceRows.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
     }
     val queries = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -51,7 +55,7 @@ object Listened {
     try {
       val a = f
       SpecListenerBus.drain(sc)
-      (a, Counts(actions.get, jobs.get, sourceTasks.get))
+      (a, Counts(actions.get, jobs.get, sourceRows.get))
     } finally {
       sc.setLocalProperty(TagKey, null)
       spark.listenerManager.unregister(queries)

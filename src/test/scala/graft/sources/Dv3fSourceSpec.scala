@@ -5,8 +5,8 @@ import java.nio.file.Files
 
 import scala.collection.JavaConverters._
 
-import graft.{Listened, SparkSpec}
-import graft.dv3f.Dv3fConfig
+import graft.SparkSpec
+import graft.dv3f.{Dv3fConfig, IngestJob, RunLog}
 import graft.queries.Dv3fQueries
 
 class Dv3fSourceSpec extends SparkSpec {
@@ -15,6 +15,18 @@ class Dv3fSourceSpec extends SparkSpec {
       results: String): Unit =
     Files.writeString(new File(dir, s"${scope}_$code.json").toPath,
       s"""{"count":1,"next":null,"previous":null,"results":[$results]}""")
+
+  private def scanOf(dir: File): Dv3fScan =
+    new Dv3fScanBuilder(Map("path" -> dir.getAbsolutePath)).build().asInstanceOf[Dv3fScan]
+
+  /** The (scope, code) pairs of a scan's planned partitions, in order. */
+  private def plannedPairs(scan: Dv3fScan): Seq[(String, String)] =
+    scan.planInputPartitions().toSeq.flatMap(_.asInstanceOf[Dv3fPartition].pairs)
+
+  private def countingSource(dir: File) = spark.read.format("dv3f")
+    .option("path", dir.getAbsolutePath)
+    .option("fetcher", classOf[CountingFileFetcher].getName)
+    .load()
 
   test("format(\"dv3f\") resolves via DataSourceRegister; one partition per (scope, code)") {
     val dir = Files.createTempDirectory("dv3fsrc").toFile
@@ -228,20 +240,19 @@ class Dv3fSourceSpec extends SparkSpec {
       """{"annee":"2019","dep":"17","libdep":"C","a_cod1":2.0}""")
     writePayload(dir, "region", "52",
       """{"annee":"2019","reg":"52","libreg":"P","a_cod1":3.0}""")
-    def scan() = new Dv3fScanBuilder(Map("path" -> dir.getAbsolutePath))
-      .build().asInstanceOf[Dv3fScan]
-    val s1 = scan()
-    assert(s1.planInputPartitions().length == 3)
+    val s1 = scanOf(dir)
+    assert(plannedPairs(s1) == Seq(
+      ("departement", "17"), ("departement", "85"), ("region", "52")))
     assert(s1.filterAttributes().map(_.describe()).toSet == Set("scope", "code"))
     s1.filter(Array[org.apache.spark.sql.sources.Filter](In("code", Array("85", "52"))))
-    assert(s1.planInputPartitions().length == 2)
+    assert(plannedPairs(s1) == Seq(("departement", "85"), ("region", "52")))
     // composes: a second runtime filter on scope intersects further
     s1.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("scope", "region")))
-    assert(s1.planInputPartitions().length == 1)
+    assert(plannedPairs(s1) == Seq(("region", "52")))
     // conservative on unknown predicates: nothing changes
     s1.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.GreaterThan("valeur", 0.0)))
-    assert(s1.planInputPartitions().length == 1)
+    assert(plannedPairs(s1) == Seq(("region", "52")))
   }
 
   test("runtime filtering e2e: a broadcast dim join only fetches the joined codes") {
@@ -335,20 +346,159 @@ class Dv3fSourceSpec extends SparkSpec {
     // the session is shared by every suite: compare with what was
     // persisted before, not with an empty registry
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    // the first call creates both tables, the second merges onto them
+    // the first call creates both tables, the second merges onto them;
+    // runViaSource's own body, over a source whose fetcher counts
     for (_ <- 1 to 2) {
-      val (reports, counts) = Listened(spark)(
-        graft.dv3f.IngestJob.runViaSource(spark, dir.getAbsolutePath, wh))
+      CountingFileFetcher.reset()
+      val reports = IngestJob.loadStaging(spark, countingSource(dir), wh)
       assert(reports.forall(_.ok) && reports.map(_.rows).sum == 3)
-      assert(counts.sourceTasks == 3, counts) // one task per payload file
+      // one first-page fetch per payload file, whatever the task count
+      assert(CountingFileFetcher.fetchedKeys.sorted ==
+        Seq("departement:44", "departement:85", "region:52"))
       assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
     }
     // a failing batch is unpersisted too
     Files.writeString(new File(dir, "departement_85.json").toPath,
       """{"count":0,"results":[]}""")
-    val reports = graft.dv3f.IngestJob.runViaSource(spark, dir.getAbsolutePath, wh)
+    val reports = IngestJob.runViaSource(spark, dir.getAbsolutePath, wh)
     assert(reports.map(_.ok) == Seq(false, true))
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+  }
+
+  test("packing: 119 payload files plan at most defaultParallelism partitions, every pair once") {
+    val dir = Files.createTempDirectory("dv3fpack").toFile
+    for ((scope, code) <- Dv3fConfig.defaultScopes)
+      writePayload(dir, scope, code,
+        s"""{"annee":"2019","dep":"$code","reg":"$code","libdep":"L","libreg":"L","a_cod1":1.0}""")
+    val cores = spark.sparkContext.defaultParallelism
+    val parts = scanOf(dir).planInputPartitions().map(_.asInstanceOf[Dv3fPartition].pairs)
+    assert(parts.length == math.min(119, cores))
+    // near-equal pair counts, in the sorted payload-file order
+    assert(parts.map(_.size).max - parts.map(_.size).min <= 1)
+    assert(parts.toSeq.flatten ==
+      Dv3fConfig.defaultScopes.sortBy { case (s, c) => s"${s}_$c.json" })
+    // and the packed scan reads every payload
+    val df = spark.read.format("dv3f").option("path", dir.getAbsolutePath).load()
+    assert(df.rdd.getNumPartitions == parts.length)
+    assert(df.select("scope", "code").distinct().count() == 119)
+  }
+
+  test("a multi-pair partition honours a pushed LIMIT and a pushed aggregate") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("dv3fmulti").toFile
+    new File(dir, "pages").mkdirs()
+    // twice as many pairs as cores: every planned partition holds two
+    val cores = spark.sparkContext.defaultParallelism
+    val codes = (1 to 2 * cores).map(i => f"$i%02d")
+    // per pair: 3 long rows on page 1 (one of them a null valeur), 1 on page 2
+    for ((c, i) <- codes.zipWithIndex) {
+      Files.writeString(new File(dir, s"departement_$c.json").toPath,
+        s"""{"count":3,"next":"pages/departement_${c}_2.json","previous":null,
+          |"results":[{"annee":"2019","dep":"$c","libdep":"L","a_cod1":$i.5,"b_cod1":null},
+          |           {"annee":"2020","dep":"$c","libdep":"L","a_cod1":${100 + i}.0}]}""".stripMargin)
+      Files.writeString(new File(dir, s"pages/departement_${c}_2.json").toPath,
+        s"""{"count":3,"next":null,"previous":null,
+          |"results":[{"annee":"2021","dep":"$c","libdep":"L","a_cod1":${200 + i}.0}]}""".stripMargin)
+    }
+    val df = countingSource(dir)
+    assert(df.rdd.getNumPartitions == cores)
+    val raw = df.collect().map(r => (r.getString(1), r.getString(2),
+      if (r.isNullAt(5)) None else Some(r.getDouble(5)))).toSeq
+    assert(raw.size == 4 * codes.size)
+
+    // LIMIT, read through one two-pair partition: each pair keeps its
+    // own cap and page chain, and a cap met on page 1 fetches no page 2
+    def readPartition(limit: Int): Seq[(String, String)] = {
+      val b = new Dv3fScanBuilder(Map("path" -> dir.getAbsolutePath,
+        "fetcher" -> classOf[CountingFileFetcher].getName))
+      b.pushLimit(limit)
+      val reader = b.build().asInstanceOf[Dv3fScan].createReaderFactory()
+        .createReader(Dv3fPartition(Seq(("departement", "01"), ("departement", "02"))))
+      try Iterator.continually(reader).takeWhile(_.next()).map(_.get())
+        .map(r => (r.getUTF8String(1).toString, r.getUTF8String(2).toString)).toSeq
+      finally reader.close()
+    }
+    val unpushed = raw.map { case (c, y, _) => (c, y) }
+    for ((limit, nextPages) <- Seq(3 -> 0, 4 -> 2)) {
+      CountingFileFetcher.reset()
+      assert(readPartition(limit) ==
+        Seq("01", "02").flatMap(c => unpushed.filter(_._1 == c).take(limit)))
+      val pages = CountingFileFetcher.fetchedKeys
+      assert(pages.count(_.startsWith("pages/")) == nextPages, pages)
+    }
+    val limited = df.limit(5).collect().map(r => (r.getString(1), r.getString(2)))
+    assert(limited.length == 5 && limited.forall(unpushed.contains))
+
+    // pushed aggregate: partials over two pairs per task merge to the
+    // unpushed answer, whether the grouping spans pairs or splits them
+    for (keys <- Seq(Seq("annee"), Seq("code", "annee"))) {
+      val agg = df.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)), count(col("valeur")), min(col("valeur")), max(col("valeur")))
+      assert(agg.queryExecution.executedPlan.toString.contains("agg=["))
+      val got = agg.collect().map(r => r.toSeq).toSet
+      val want = raw.groupBy { case (c, y, _) => if (keys.size == 1) Seq(y) else Seq(c, y) }
+        .map { case (k, rs) =>
+          val vs = rs.flatMap(_._3)
+          k ++ Seq(rs.size.toLong, vs.size.toLong, vs.min, vs.max)
+        }.toSet
+      assert(got == want)
+    }
+  }
+
+  test("runViaSource's tables run on threads that carry the caller's local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("dv3fprops").toFile
+    val wh = Files.createTempDirectory("dv3fwhprops").toFile.getAbsolutePath
+    writePayload(dir, "departement", "85",
+      """{"annee":"2019","dep":"85","libdep":"Vendée","nbtrans_cod111":7.0}""")
+    writePayload(dir, "region", "52",
+      """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0}""")
+    val sc = spark.sparkContext
+    val caller = java.util.UUID.randomUUID.toString
+    val jobProps = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobProps.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(CountingFileFetcher.CallerKey))).getOrElse("-"))
+    }
+    CountingFileFetcher.reset()
+    org.apache.spark.SpecListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(CountingFileFetcher.CallerKey, caller)
+    val reports = try {
+      val r = IngestJob.loadStaging(spark, countingSource(dir), wh)
+      org.apache.spark.SpecListenerBus.drain(sc)
+      r
+    } finally {
+      sc.setLocalProperty(CountingFileFetcher.CallerKey, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(reports.forall(_.ok), reports)
+    // every job of both tables carries the property...
+    assert(jobProps.size >= 4 && jobProps.asScala.forall(_ == caller), jobProps)
+    // ...down to the scan tasks that fetched each table's payload
+    assert(CountingFileFetcher.fetched.asScala.toSet ==
+      Set(("departement:85", caller), ("region:52", caller)))
+  }
+
+  test("the ingest logs its tables in staging order when departement fails late and region lands") {
+    val logFile = Files.createTempFile("graft-ingest-order", ".log").toString
+    RunLog.toFile(logFile)
+    val dir = Files.createTempDirectory("dv3forder").toFile
+    val wh = Files.createTempDirectory("dv3fwhorder").toFile.getAbsolutePath
+    Files.writeString(new File(dir, "departement_85.json").toPath,
+      """{"count":0,"results":[]}""") // malformed: empty results
+    writePayload(dir, "region", "52",
+      """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0}""")
+    // departement's fetch is slowed, so region finishes first
+    val longDf = spark.read.format("dv3f").option("path", dir.getAbsolutePath)
+      .option("fetcher", classOf[SlowDepartementFetcher].getName).load()
+    val reports = IngestJob.loadStaging(spark, longDf, wh)
+    assert(reports.map(r => (r.scope, r.ok)) == Seq(("departement", false), ("region", true)))
+    val lines = scala.io.Source.fromFile(logFile).getLines().filter(_.contains("scope=")).toSeq
+    assert(lines.size == 2, lines)
+    assert(lines(0).contains("status=error scope=departement"), lines)
+    assert(lines(1).contains("status=ok scope=region"), lines)
   }
 
   test("scope equality filter prunes InputPartitions at planning time") {
@@ -511,5 +661,40 @@ object FlakyFetcher {
   def reset(failuresBeforeSuccess: Int): Unit = {
     attempts.set(0); notFoundAttempts.set(0)
     this.failuresBeforeSuccess.set(failuresBeforeSuccess)
+  }
+}
+
+/** The file fetcher, recording every page fetch: first pages as
+  * `scope:code`, later pages by locator, each with the
+  * [[CountingFileFetcher.CallerKey]] local property of the task that
+  * fetched it (`-` outside a task).
+  */
+class CountingFileFetcher(path: String) extends FilePageFetcher(path) {
+  override def firstPage(scope: String, code: String)
+      : com.fasterxml.jackson.databind.JsonNode = {
+    CountingFileFetcher.record(s"$scope:$code")
+    super.firstPage(scope, code)
+  }
+  override def nextPage(locator: String): com.fasterxml.jackson.databind.JsonNode = {
+    CountingFileFetcher.record(locator)
+    super.nextPage(locator)
+  }
+}
+
+object CountingFileFetcher {
+  val CallerKey = "graft.spec.caller"
+  val fetched = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  def record(key: String): Unit = fetched.add((key, Option(org.apache.spark.TaskContext.get())
+    .flatMap(t => Option(t.getLocalProperty(CallerKey))).getOrElse("-")))
+  def fetchedKeys: Seq[String] = fetched.asScala.toSeq.map(_._1)
+  def reset(): Unit = fetched.clear()
+}
+
+/** The file fetcher with departement first pages served 500 ms late. */
+class SlowDepartementFetcher(path: String) extends FilePageFetcher(path) {
+  override def firstPage(scope: String, code: String)
+      : com.fasterxml.jackson.databind.JsonNode = {
+    if (scope == "departement") Thread.sleep(500)
+    super.firstPage(scope, code)
   }
 }

@@ -208,6 +208,32 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("dv3f streaming ingest: a micro-batch reads each payload once and leaves nothing cached") {
+    val payloads = java.nio.file.Files.createTempDirectory("dv3fonce").toFile
+    val wh = java.nio.file.Files.createTempDirectory("dv3foncewh").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("dv3fonceck").toString
+    // three metric cells per payload: 6 long source rows in all
+    for ((scope, code) <- Seq(("departement", "85"), ("region", "52")))
+      java.nio.file.Files.writeString(
+        new java.io.File(payloads, s"${scope}_$code.json").toPath,
+        s"""{"count":1,"next":null,"previous":null,"results":[
+           |{"annee":"2019","dep":"$code","libdep":"L","reg":"$code","libreg":"L",
+           |"nbtrans_cod111":7.0,"nbtrans_cod121":2.0,"valeurfonc_sum_cod111":5.5}]}""".stripMargin)
+    // the session is shared by every suite: compare with what was
+    // persisted before, not with an empty registry
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, counts) = graft.Listened(spark) {
+      val q = Dv3fStreamingIngest.start(spark, payloads.getAbsolutePath, wh, ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // one read of each payload per micro-batch: no emptiness probe, and
+    // the merge's two uses of the batch read the persisted rows
+    assert(counts.sourceRows == 6, counts)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    for (t <- Seq("src_departement", "src_region")) // cod 111 and 121
+      assert(graft.dv3f.Upsert.read(spark, s"$wh/$t").count() == 2)
+  }
+
   test("dv3f streaming ingest: kill-and-resume is exactly-once; replay converges") {
     val payloads = java.nio.file.Files.createTempDirectory("dv3fres").toFile
     val wh = java.nio.file.Files.createTempDirectory("dv3freswh").toString
