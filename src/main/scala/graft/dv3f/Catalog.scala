@@ -66,15 +66,15 @@ object Catalog {
     Dv3fConfig.staging.foreach(ensureStagingTable(spark, warehouseDir, _))
 
   /** After an upsert committed a new snapshot, re-point the catalog
-    * table at it and refresh cached file listings. The old snapshot
-    * stays on disk for Upsert.keepCommits commits, so queries planned
-    * against the previous location still read consistent data.
+    * table at it. `ALTER TABLE … SET LOCATION` refreshes the table
+    * itself (its cached relation, file listing and any cached data), so
+    * no `REFRESH TABLE` follows. The old snapshot stays on disk for
+    * Upsert.keepCommits commits, so queries planned against the
+    * previous location still read consistent data.
     */
-  def refresh(spark: SparkSession, warehouseDir: String, table: StagingTable): Unit = {
+  def refresh(spark: SparkSession, warehouseDir: String, table: StagingTable): Unit =
     spark.sql(s"ALTER TABLE $database.${table.name} " +
       s"SET LOCATION '${liveLocation(spark, warehouseDir, table)}'")
-    spark.sql(s"REFRESH TABLE $database.${table.name}")
-  }
 
   /** Refresh cached file listings only (no location re-point). */
   def refresh(spark: SparkSession, table: StagingTable): Unit =

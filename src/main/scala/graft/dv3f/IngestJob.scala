@@ -5,7 +5,7 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -32,10 +32,12 @@ object JsonFlatten {
   *
   * `fetch` is pluggable (the reference hits
   * https://apidf-preprod.cerema.fr; tests inject fixtures). [[run]] is
-  * the phase-1 shape: fetch on the driver per partition, transform/load
-  * distributed. [[runViaSource]] is the at-scale shape: the fetch runs
-  * on executors inside the DataSource V2 `dv3f` reader, and the
-  * transform/load is unchanged by that move.
+  * the phase-1 shape: fetch on the driver per partition, then the
+  * melt → split → pivot → uid transform (`Reshape.transform`) and the
+  * load. [[runViaSource]] is the at-scale shape: the fetch and the
+  * melt → split → pivot run on executors inside the DataSource V2 `dv3f`
+  * reader, one (scope, code) page chain at a time, so the staged batch
+  * is built with no shuffle; the load is the same.
   */
 object IngestJob {
   /** One branch's outcome. `layerMs` holds the wall-clock ms of each
@@ -72,34 +74,36 @@ object IngestJob {
       scopes: Seq[(String, String)] = Dv3fConfig.defaultScopes): Seq[BranchReport] =
     scopes.map { case (s, c) => runBranch(spark, fetch, warehouseDir)(s, c) }
 
-  /** The at-scale shape: the DSv2 `dv3f` source fetches and flattens
-    * the payloads on executors, its (scope, code) pairs packed into at
-    * most `defaultParallelism` scan tasks per table, then ONE upsert per
-    * target table instead of a table rewrite per branch (see
-    * [[loadStaging]]). Error isolation moves down a level: a bad
-    * partition fails its table's batch, the other table still lands.
+  /** The at-scale shape: the DSv2 `dv3f` source fetches the payloads
+    * and folds each (scope, code) page chain into staging rows on
+    * executors, its pairs packed into at most `defaultParallelism` scan
+    * tasks per table, then ONE upsert per target table instead of a
+    * table rewrite per branch (see [[loadStaging]]). Error isolation
+    * moves down a level: a bad partition fails its table's batch, the
+    * other table still lands.
     */
   def runViaSource(spark: SparkSession, payloadDir: String,
       warehouseDir: String): Seq[BranchReport] =
-    loadStaging(spark,
-      spark.read.format("dv3f").option("path", payloadDir).load(), warehouseDir)
+    loadStaging(spark, spark.read.format("dv3f").option("path", payloadDir), warehouseDir)
 
-  /** Stage and [[load]] every table of `Dv3fConfig.staging` from one
-    * long-shaped `dv3f` frame, the tables side by side: each runs on a
-    * thread this call starts, so it inherits the caller's Spark local
-    * properties (job group, description, scheduler pool, tags), and the
-    * call joins both before it returns. Each table's batch scans the
-    * source once. One report per table, logged and returned in staging
+  /** Stage (`Dv3fSource.staged`) and [[load]] every table of
+    * `Dv3fConfig.staging` from one configured `dv3f` reader, the tables
+    * side by side: each runs on a thread this call starts, so it
+    * inherits the caller's Spark local properties (job group,
+    * description, scheduler pool, tags), and the call joins both before
+    * it returns. Each table's batch scans the source once, with no
+    * exchange. One report per table, logged and returned in staging
     * order; a table's failure is its own report.
     */
-  private[graft] def loadStaging(spark: SparkSession, longDf: DataFrame,
+  private[graft] def loadStaging(spark: SparkSession, reader: DataFrameReader,
       warehouseDir: String): Seq[BranchReport] = {
     val tables = Dv3fConfig.staging
+    // built on this thread: a DataFrameReader is mutable, not for sharing
+    val batches = tables.map(graft.sources.Dv3fSource.staged(reader, _))
     val pool = Executors.newFixedThreadPool(tables.size)
     try {
-      val done = pool.invokeAll(tables.map { table =>
-        (() => Try(load(spark, warehouseDir, table)(
-          graft.sources.Dv3fSource.stage(longDf, table)))): Callable[Try[Loaded]]
+      val done = pool.invokeAll(tables.zip(batches).map { case (table, batch) =>
+        (() => Try(load(spark, warehouseDir, table)(batch))): Callable[Try[Loaded]]
       }.asJava).asScala
       tables.zip(done).map { case (table, f) =>
         logged(table.scope, "*")(

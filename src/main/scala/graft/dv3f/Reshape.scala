@@ -34,8 +34,13 @@ object Reshape {
     */
   def splitCod(df: DataFrame): DataFrame = df
     .withColumn("cod", regexp_replace(
-      regexp_extract(col("cod_full"), "^(.*)_([^_]*)$", 2), "cod", ""))
-    .withColumn("cod_full", regexp_extract(col("cod_full"), "^(.*)_([^_]*)$", 1))
+      regexp_extract(col("cod_full"), codSplit, 2), "cod", ""))
+    .withColumn("cod_full", regexp_extract(col("cod_full"), codSplit, 1))
+
+  /** The (metric name, code) split of [[splitCod]], also applied by the
+    * `dv3f` source's staging-shaped reader.
+    */
+  private[graft] val codSplit = "^(.*)_([^_]*)$"
 
   /** T3 — pivot long → wide, one column per metric, first non-null value
     * per cell. reference: scripts/extract_load.py:164-169
@@ -58,9 +63,9 @@ object Reshape {
       .pivot("cod_full", table.metricNames)
       .agg(first(col("valeur"), ignoreNulls = true))
     // restore declared metric types (long for nbtrans, double otherwise)
-    table.metricFields.foldLeft(wide) { (d, f) =>
-      d.withColumn(f.name, col(f.name).cast(f.dataType))
-    }
+    // in one projection
+    wide.select(keys.map(col) ++
+      table.metricFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /** T4 — content-hash surrogate key: sha256 hex over the UTF-8 concat of

@@ -78,13 +78,6 @@ object Dv3fQueries {
   def dv3fPipeline(spark: SparkSession, dir: String): DataFrame =
     Reshape.transform(fixtureWide(spark), Dv3fConfig.departement)
 
-  /** S1 phase 2 — the SAME flagship pipeline, but entering through the
-    * DataSource V2 `format("dv3f")` reader: the fixture payload is
-    * serialized to an API-shaped JSON file, read back with its (scope,
-    * code) pairs packed into core-sized InputPartitions (fetch+flatten
-    * on executors), then staged. Oracle-identical to q_dv3f_pipeline —
-    * which is the point: the source is a drop-in scan.
-    */
   /** The FIXTURES wide payload serialized as an API-shaped JSON dir for
     * the dv3f source (one departement_85 partition).
     */
@@ -99,11 +92,17 @@ object Dv3fQueries {
     tmp.getAbsolutePath
   }
 
-  def dv3fSourcePipeline(spark: SparkSession, dir: String): DataFrame = {
-    val longDf = spark.read.format("dv3f")
-      .option("path", fixtureApiDir(spark)).load()
-    graft.sources.Dv3fSource.stage(longDf, Dv3fConfig.departement)
-  }
+  /** S1 phase 2 — the SAME flagship pipeline, but entering through the
+    * DataSource V2 `format("dv3f")` reader: the fixture payload is
+    * serialized to an API-shaped JSON file and read back in the staging
+    * shape — the fetch, melt, split and pivot of each (scope, code) page
+    * chain run on executors, its pairs packed into core-sized
+    * InputPartitions — then staged with no exchange. Oracle-identical to
+    * q_dv3f_pipeline — which is the point: the source is a drop-in scan.
+    */
+  def dv3fSourcePipeline(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Dv3fSource.staged(
+      spark.read.format("dv3f").option("path", fixtureApiDir(spark)), Dv3fConfig.departement)
 
   /** S1 phase 3 — DSv2 AGGREGATE pushdown through the same source: the
     * per-annee indicator profile (metric-cell count, observed-value

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.collection.JavaConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -35,12 +35,17 @@ import graft.dv3f.{Reshape, StagingTable}
   * (reference GET: scripts/extract_load.py:78) with every other moving
   * part (planning, partitioning, pruning, row emission) unchanged.
   *
-  * The table presents the LONG (melted) shape — (scope, code, annee, lib,
-  * cod_full, valeur) — because the API's wide column set is
-  * data-dependent while a DSv2 table schema must be fixed up front. The
-  * wide→long flatten happens row-at-a-time in the reader (cheap,
-  * executor-side); `Dv3fSource.stage` then runs the standard
-  * split→pivot→uid chain to staging shape.
+  * The table has one of two shapes, chosen by the caller's schema:
+  *  - no schema: the LONG (melted) shape [[schema]] — (scope, code,
+  *    annee, lib, cod_full, valeur), one row per metric cell, the shape
+  *    for ad-hoc reads, limit and aggregate pushdown;
+  *  - a [[stagingSchema]]: the STAGING shape — (scope, code, annee, lib,
+  *    cod) plus one double column per metric. The reference's melt →
+  *    split → pivot (scripts/extract_load.py:143-169) only ever groups
+  *    cells of one (scope, code) page chain, and one reader drains that
+  *    chain whole, so the reader folds the chain itself
+  *    ([[Dv3fPivotReader]]) and [[staged]] needs no exchange.
+  * Any other schema is refused.
   */
 object Dv3fSource {
   val schema: StructType = StructType(Seq(
@@ -54,17 +59,91 @@ object Dv3fSource {
   private[sources] val idFields =
     Set("annee", "dep", "reg", "libdep", "libreg")
 
-  /** Long source rows → staging rows for one table: rename the generic
-    * (code, lib) columns to the scope's names, then split→pivot→uid.
+  /** The leading columns of the staging shape; the metric columns follow. */
+  private[sources] val stagingKeys = Seq("scope", "code", "annee", "lib", "cod")
+
+  /** The staging-shaped read schema for `table`: the [[stagingKeys]]
+    * then the table's metrics, all double (the casts to the declared
+    * metric types happen in [[staged]]).
     */
-  def stage(longDf: DataFrame, table: StagingTable): DataFrame = {
-    val renamed = longDf.filter(col("scope") === table.scope)
-      .select(col("annee"),
-        col("code").as(table.idVars(1)),
-        col("lib").as(table.idVars(2)),
-        col("cod_full"), col("valeur"))
-    Reshape.withUid(Reshape.pivotFirst(Reshape.splitCod(renamed), table), table)
-      .select(table.schema.fieldNames.map(col): _*)
+  def stagingSchema(table: StagingTable): StructType = StructType(
+    stagingKeys.map(n => StructField(n, StringType, nullable = n != "scope" && n != "code")) ++
+      table.metricNames.map(StructField(_, DoubleType)))
+
+  /** Whether a caller's schema is the staging shape: the
+    * [[stagingKeys]] as strings, then distinctly named double columns.
+    * Throws for a schema that is neither this nor the long [[schema]].
+    */
+  private[sources] def isStaging(s: StructType): Boolean = {
+    val cols = s.map(f => (f.name, f.dataType))
+    val (keys, metrics) = cols.splitAt(stagingKeys.size)
+    if (cols == schema.map(f => (f.name, f.dataType))) false
+    else if (keys == stagingKeys.map((_, StringType)) &&
+        metrics.forall(_._2 == DoubleType) && s.fieldNames.distinct.length == s.length) true
+    else throw new IllegalArgumentException(
+      s"dv3f source: unsupported schema ${s.simpleString}; give none for the long " +
+        s"shape ${schema.simpleString}, or ${stagingKeys.mkString(", ")} as strings " +
+        "followed by double metric columns")
+  }
+
+  /** Staging rows for one table, read in the staging shape: the scope
+    * filter (pushed into the scan, so only this scope's payloads are
+    * fetched), the rename of the generic (code, lib) columns to the
+    * scope's names, then the declared metric types and the sha2 uid.
+    * All three steps are narrow: the plan has no exchange.
+    */
+  def staged(reader: DataFrameReader, table: StagingTable): DataFrame = {
+    val renamed = reader.schema(stagingSchema(table)).load()
+      .filter(col("scope") === table.scope)
+      .withColumnsRenamed(Map("code" -> table.codeCol, "lib" -> table.idVars(2)))
+    renamed.select(table.schema.fields.toSeq.map {
+      case f if f.name == "uid" => Reshape.uidColumn(table).as("uid")
+      case f => col(f.name).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** The `results` arrays of one (scope, code) page chain, fetched
+    * lazily: a page is fetched only when the previous one is drained.
+    * The payload's `next` locator (extract_load.py:81-91) is FOLLOWED; a
+    * visited set guards against locator cycles, seeded with the
+    * FETCHER's own first-page locator so a `next` pointing back at page
+    * 1 terminates for any fetcher (file name or URL alike). An empty or
+    * missing `results` fails the read (extract_load.py:92-94).
+    */
+  private[sources] def results(fetcher: PageFetcher, scope: String,
+      code: String): Iterator[JsonNode] = {
+    val visited = scala.collection.mutable.Set[String](fetcher.firstLocator(scope, code))
+    Iterator.iterate(Option(fetcher.firstPage(scope, code))) {
+      case Some(root) =>
+        Option(root.get("next")).filterNot(_.isNull).map(_.asText)
+          .filter(_.nonEmpty).filter(visited.add)
+          .map(fetcher.nextPage)
+      case None => None
+    }.takeWhile(_.isDefined).map { page =>
+      val results = page.get.get("results")
+      if (results == null || !results.isArray || results.size() == 0)
+        throw new IllegalStateException(
+          s"empty or malformed payload for ($scope, $code)")
+      results
+    }
+  }
+
+  /** A result object's id cells: its annee and its libdep, else libreg. */
+  private[sources] def annee(obj: JsonNode): String =
+    Option(obj.get("annee")).filterNot(_.isNull).map(_.asText).orNull
+  private[sources] def lib(obj: JsonNode): String =
+    Seq("libdep", "libreg").iterator
+      .map(obj.get).find(n => n != null && !n.isNull).map(_.asText).orNull
+
+  private val codPattern = java.util.regex.Pattern.compile(Reshape.codSplit)
+
+  /** A metric field name split as `Reshape.splitCod` splits `cod_full`:
+    * on its last `_` into (metric, code), every "cod" stripped from the
+    * code; ("", "") when the name has no `_`.
+    */
+  private[sources] def splitCod(field: String): (String, String) = {
+    val m = codPattern.matcher(field)
+    if (m.find()) (m.group(1), m.group(2).replace("cod", "")) else ("", "")
   }
 }
 
@@ -167,22 +246,29 @@ class FilePageFetcher(path: String) extends PageFetcher {
     s"${scope}_$code.json"
 }
 
+/** The source. A caller's schema (`spark.read.format("dv3f").schema(s)`)
+  * picks the table's shape; with none, Spark asks [[inferSchema]] and
+  * the table is long.
+  */
 class Dv3fDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "dv3f"
+  override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Dv3fSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
-    new Dv3fTable(properties.asScala.toMap)
+    if (Dv3fSource.isStaging(schema)) new Dv3fTable(properties.asScala.toMap, schema)
+    else new Dv3fTable(properties.asScala.toMap)
 }
 
-class Dv3fTable(props: Map[String, String]) extends Table with SupportsRead {
+class Dv3fTable(props: Map[String, String],
+    tableSchema: StructType = Dv3fSource.schema) extends Table with SupportsRead {
   override def name(): String = s"dv3f(${props.getOrElse("path", "?")})"
-  override def schema(): StructType = Dv3fSource.schema
+  override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Dv3fScanBuilder(options.asScala.toMap)
+    new Dv3fScanBuilder(options.asScala.toMap, tableSchema)
 }
 
 /** One pushed-down aggregate over the long rows of a partition —
@@ -200,9 +286,11 @@ case class Dv3fMax(colName: String) extends Dv3fAgg
   * time — a `scope = 'region'` query never fetches departement payloads,
   * and one scope's bad payload cannot fail another scope's job. All
   * filters are also left as residuals for Spark to re-apply (safe
-  * double-filtering).
+  * double-filtering). Limit and aggregate pushdown apply to the long
+  * shape only.
   */
-class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
+class Dv3fScanBuilder(options: Map[String, String],
+    tableSchema: StructType = Dv3fSource.schema) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownAggregates {
   import org.apache.spark.sql.sources.{EqualTo, Filter}
@@ -210,7 +298,8 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
   private var scopeEq: Option[String] = None
   private var codeEq: Option[String] = None
   private var limit: Option[Int] = None
-  private var required: StructType = Dv3fSource.schema
+  private val pivot = Dv3fSource.isStaging(tableSchema)
+  private var required: StructType = tableSchema
   private var pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -233,9 +322,13 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
     * (scope, code), not the full drain. Returning false keeps Spark's
     * own global LIMIT as the residual (per-reader caps alone cannot
     * implement a global limit across partitions), so this is a pure
-    * fetch-cost optimization with unchanged semantics.
+    * fetch-cost optimization with unchanged semantics. Declined for the
+    * staging shape: a group's row is only known once its chain is drained.
     */
-  override def pushLimit(l: Int): Boolean = { limit = Some(l); false }
+  override def pushLimit(l: Int): Boolean = {
+    if (!pivot) limit = Some(l)
+    false
+  }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // once an aggregation is pushed the scan's schema IS the
@@ -254,9 +347,11 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
     * pre-aggregation semantically safe for any grouping, including
     * groupings finer or coarser than the (scope, code) partitioning.
     * Anything not translatable (DISTINCT, SUM/AVG, expressions) is
-    * declined and Spark falls back to the unaggregated scan.
+    * declined and Spark falls back to the unaggregated scan, and so is
+    * any aggregate over the staging shape.
     */
   override def pushAggregation(agg: Aggregation): Boolean = {
+    if (pivot) return false
     import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     def fieldOf(e: Expression): Option[String] = e match {
@@ -290,13 +385,14 @@ class Dv3fScanBuilder(options: Map[String, String]) extends ScanBuilder
   }
 
   override def build(): Scan =
-    new Dv3fScan(options, scopeEq, codeEq, required, limit, pushedAgg)
+    new Dv3fScan(options, scopeEq, codeEq, required, limit, pushedAgg, pivot)
 }
 
 class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
     codeEq: Option[String], required: StructType,
     limit: Option[Int] = None,
-    pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None)
+    pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None,
+    pivot: Boolean = false)
     extends Scan with Batch with SupportsRuntimeFiltering {
   private val path = options.getOrElse("path",
     throw new IllegalArgumentException("dv3f source requires option 'path'"))
@@ -346,9 +442,9 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
       s"columns=[${required.fieldNames.mkString(", ")}] " +
       s"runtimeFilters=[scope, code]"
 
-  /** Planning: the (scope, code) pairs of the explicit `scopes` option
-    * ("departement:85,region:11") or of the payload files found under
-    * `path`, sorted, minus the pairs excluded by pushed-down scope/code
+  /** Planning: the distinct (scope, code) pairs of the explicit `scopes`
+    * option ("departement:85,region:11") or of the payload files found
+    * under `path`, sorted, minus the pairs excluded by pushed-down scope/code
     * equality filters and runtime filters. The remaining pairs are
     * packed in order into at most `defaultParallelism` partitions of
     * near-equal pair counts: a payload is a few hundred cells, so one
@@ -371,7 +467,9 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
           if (i <= 0) None else Some((base.substring(0, i), base.substring(i + 1)))
         }
     }
-    val pairs = scopes.filter { case (s, c) =>
+    // a pair named twice would be fetched twice and, in the staging
+    // shape, staged as duplicate uids
+    val pairs = scopes.distinct.filter { case (s, c) =>
       scopeEq.forall(_ == s) && codeEq.forall(_ == c) &&
         runtimeScopes.forall(_.contains(s)) && runtimeCodes.forall(_.contains(c))
     }
@@ -397,7 +495,7 @@ class Dv3fScan(options: Map[String, String], scopeEq: Option[String],
     val hardened = new RetryingFetcher(fetcher,
       maxRetries = options.getOrElse("fetchretries", "3").toInt,
       baseBackoffMs = options.getOrElse("fetchbackoffms", "100").toLong)
-    new Dv3fReaderFactory(hardened, required, limit, pushedAgg)
+    new Dv3fReaderFactory(hardened, required, limit, pushedAgg, pivot)
   }
 }
 
@@ -406,7 +504,8 @@ case class Dv3fPartition(pairs: Seq[(String, String)]) extends InputPartition
 
 class Dv3fReaderFactory(fetcher: PageFetcher, required: StructType,
     limit: Option[Int] = None,
-    pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None)
+    pushedAgg: Option[(Seq[String], Seq[Dv3fAgg])] = None,
+    pivot: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val pairs = partition.asInstanceOf[Dv3fPartition].pairs
@@ -414,7 +513,9 @@ class Dv3fReaderFactory(fetcher: PageFetcher, required: StructType,
     // drained: every pair keeps its own page chain, visited set and limit
     def chain(schema: StructType, cap: Option[Int]) = new Dv3fChainReader(
       pairs.iterator.map { case (s, c) => new Dv3fPartitionReader(fetcher, s, c, schema, cap) })
-    pushedAgg match {
+    if (pivot) new Dv3fChainReader(
+      pairs.iterator.map { case (s, c) => new Dv3fPivotReader(fetcher, s, c, required) })
+    else pushedAgg match {
       case Some((groups, aggs)) =>
         // aggregate over the FULL long schema; the page chains still
         // stream (rows are folded into the group map as pages drain)
@@ -527,12 +628,8 @@ class Dv3fAggPartitionReader(inner: PartitionReader[InternalRow],
   * [[PageFetcher]], `results` is flattened (pandas json_normalize
   * equivalent) and melted to long rows on the fly — no driver
   * involvement, no per-row allocation beyond the emitted InternalRow.
-  * The payload's `next` locator (extract_load.py:81-91) is FOLLOWED:
-  * all pages of one (scope, code) concatenate within this reader,
-  * lazily (a page is only fetched when the previous one is drained). A
-  * visited set guards against locator cycles, seeded with the FETCHER's
-  * own first-page locator so a `next` pointing back at page 1
-  * terminates for any fetcher (file name or URL alike).
+  * All pages of one (scope, code) concatenate within this reader,
+  * lazily ([[Dv3fSource.results]]).
   */
 class Dv3fPartitionReader(fetcher: PageFetcher, scope: String, code: String,
     required: StructType, limit: Option[Int] = None)
@@ -541,25 +638,8 @@ class Dv3fPartitionReader(fetcher: PageFetcher, scope: String, code: String,
   // column pruning: emit only the pruned schema's fields, in its order
   private val fieldIdx: Array[String] = required.fieldNames
 
-  private val rows: Iterator[InternalRow] = limit.foldLeft {
-    val visited = scala.collection.mutable.Set[String](
-      fetcher.firstLocator(scope, code))
-    val pages: Iterator[JsonNode] = Iterator.iterate(
-      Option(fetcher.firstPage(scope, code))) {
-        case Some(root) =>
-          Option(root.get("next")).filterNot(_.isNull).map(_.asText)
-            .filter(_.nonEmpty).filter(visited.add)
-            .map(fetcher.nextPage)
-        case None => None
-      }.takeWhile(_.isDefined).map(_.get)
-    pages.flatMap { root =>
-      val results = root.get("results")
-      if (results == null || !results.isArray || results.size() == 0)
-        throw new IllegalStateException(
-          s"empty or malformed payload for ($scope, $code)") // extract_load.py:92-94
-      flattenPage(results)
-    }
-  } { (it, l) =>
+  private val rows: Iterator[InternalRow] = limit.foldLeft(
+    Dv3fSource.results(fetcher, scope, code).flatMap(flattenPage)) { (it, l) =>
     // pushed-down limit: take(l) on the lazy page chain — once l rows
     // have been emitted no further `next` is ever followed, whatever
     // the downstream consumer does with the iterator
@@ -568,9 +648,8 @@ class Dv3fPartitionReader(fetcher: PageFetcher, scope: String, code: String,
 
   private def flattenPage(results: JsonNode): Iterator[InternalRow] =
     results.elements().asScala.flatMap { obj: JsonNode =>
-      val annee = Option(obj.get("annee")).filterNot(_.isNull).map(_.asText).orNull
-      val lib = Seq("libdep", "libreg").iterator
-        .map(obj.get).find(n => n != null && !n.isNull).map(_.asText).orNull
+      val annee = Dv3fSource.annee(obj)
+      val lib = Dv3fSource.lib(obj)
       obj.fields().asScala
         .filterNot(e => Dv3fSource.idFields.contains(e.getKey))
         // metric fields are numeric (or null) in the API contract; a
@@ -598,6 +677,59 @@ class Dv3fPartitionReader(fetcher: PageFetcher, scope: String, code: String,
           row: InternalRow
         }
     }
+
+  private var current: InternalRow = _
+  override def next(): Boolean =
+    if (rows.hasNext) { current = rows.next(); true } else false
+  override def get(): InternalRow = current
+  override def close(): Unit = ()
+}
+
+/** Executor-side melt → split → pivot for one (scope, code), in the
+  * staging shape: the whole page chain is folded into one row per
+  * (annee, lib, cod), each metric field name split as
+  * [[Dv3fSource.splitCod]]. A metric cell takes the first non-null
+  * numeric value in page order (pandas `first`), and a group forms on
+  * any non-null numeric cell, also one whose metric is not a column
+  * here (undeclared, or pruned away) — so column pruning never changes
+  * which rows come out. Rows are emitted once the chain is drained; the
+  * state is one chain's groups.
+  */
+class Dv3fPivotReader(fetcher: PageFetcher, scope: String, code: String,
+    required: StructType) extends PartitionReader[InternalRow] {
+
+  private val metricIdx: Map[String, Int] = required.fieldNames.zipWithIndex
+    .filterNot { case (n, _) => Dv3fSource.stagingKeys.contains(n) }.toMap
+
+  private def newRow(annee: String, lib: String, cod: String): GenericInternalRow = {
+    val row = new GenericInternalRow(required.length)
+    // UTF8String.fromString(null) is null; a metric stays null until a value is seen
+    val keys = Map("scope" -> scope, "code" -> code, "annee" -> annee, "lib" -> lib, "cod" -> cod)
+    required.fieldNames.zipWithIndex.foreach { case (name, i) =>
+      keys.get(name).foreach(v => row.update(i, UTF8String.fromString(v)))
+    }
+    row
+  }
+
+  private lazy val rows: Iterator[InternalRow] = {
+    val groups = scala.collection.mutable.LinkedHashMap[(String, String, String), GenericInternalRow]()
+    val splits = scala.collection.mutable.HashMap[String, (Option[Int], String)]()
+    for (results <- Dv3fSource.results(fetcher, scope, code);
+         obj <- results.elements().asScala) {
+      val annee = Dv3fSource.annee(obj)
+      val lib = Dv3fSource.lib(obj)
+      for (e <- obj.fields().asScala
+           if e.getValue.isNumber && !Dv3fSource.idFields.contains(e.getKey)) {
+        val (metric, cod) = splits.getOrElseUpdate(e.getKey, {
+          val (m, c) = Dv3fSource.splitCod(e.getKey)
+          (metricIdx.get(m), c)
+        })
+        val row = groups.getOrElseUpdate((annee, lib, cod), newRow(annee, lib, cod))
+        metric.filter(row.isNullAt).foreach(row.setDouble(_, e.getValue.asDouble()))
+      }
+    }
+    groups.valuesIterator
+  }
 
   private var current: InternalRow = _
   override def next(): Boolean =

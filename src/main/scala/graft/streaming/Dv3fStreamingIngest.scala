@@ -51,11 +51,10 @@ object Dv3fStreamingIngest {
             else Some(s"${base.substring(0, i)}:${base.substring(i + 1)}")
           }
         if (scopes.nonEmpty) {
-          val longDf = spark.read.format("dv3f")
+          val reader = spark.read.format("dv3f")
             .option("path", payloadDir)
             .option("scopes", scopes.mkString(","))
-            .load()
-          val failed = IngestJob.loadStaging(spark, longDf, warehouseDir).filterNot(_.ok)
+          val failed = IngestJob.loadStaging(spark, reader, warehouseDir).filterNot(_.ok)
           if (failed.nonEmpty)
             throw new IllegalStateException(s"dv3f micro-batch failed: ${failed.mkString("; ")}")
         }

@@ -1,24 +1,28 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SpecListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts what a block makes Spark do: Dataset actions (one
-  * QueryExecutionListener callback each), jobs, and the records read by
-  * tasks of stages that scan a DataSource V2 source (`DataSourceRDD` in
-  * the stage's lineage). Jobs and stages count only when submitted by
-  * the calling thread or a thread it started (local properties are
-  * inherited), so work started elsewhere in the shared session does not
-  * leak in.
+  * QueryExecutionListener callback each), jobs, and the rows output by
+  * the DataSource V2 scans of those actions. A scan node counts once,
+  * also when it sits in a cached plan that several actions read, so a
+  * source read twice shows as twice its rows and a cached batch read
+  * back does not (its tasks report cached batches as records read,
+  * which is why task input metrics are not used). Jobs count only when
+  * submitted by the calling thread or a thread it started (local
+  * properties are inherited), so work started elsewhere in the shared
+  * session does not leak in.
   */
-object Listened {
+object Listened extends AdaptiveSparkPlanHelper {
   final case class Counts(actions: Int, jobs: Int, sourceRows: Long)
 
   private val TagKey = "graft.spec.listened"
@@ -29,24 +33,21 @@ object Listened {
     val tagged = (p: java.util.Properties) =>
       p != null && p.getProperty(TagKey) == tag
     val actions, jobs = new AtomicInteger
-    val sourceRows = new AtomicLong
-    val sourceStages = ConcurrentHashMap.newKeySet[Int]()
+    val scans = java.util.Collections.synchronizedSet(
+      java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[BatchScanExec, java.lang.Boolean]))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (tagged(e.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (tagged(e.properties) &&
-          e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
-          sourceStages.add(e.stageInfo.stageId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (sourceStages.contains(e.stageId) && e.taskMetrics != null)
-          sourceRows.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
     }
     val queries = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit = {
+        actions.incrementAndGet()
+        sourceScans(qe.executedPlan).foreach(scans.add)
+      }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = actions.incrementAndGet()
+          durationNs: Long): Unit = seen(qe)
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = actions.incrementAndGet()
+          exception: Exception): Unit = seen(qe)
     }
     SpecListenerBus.drain(sc) // earlier events must not reach the counters
     sc.addSparkListener(listener)
@@ -55,11 +56,22 @@ object Listened {
     try {
       val a = f
       SpecListenerBus.drain(sc)
-      (a, Counts(actions.get, jobs.get, sourceRows.get))
+      val sourceRows = scans.synchronized(
+        scans.toArray(Array.empty[BatchScanExec]).map(_.metrics("numOutputRows").value).sum)
+      (a, Counts(actions.get, jobs.get, sourceRows))
     } finally {
       sc.setLocalProperty(TagKey, null)
       spark.listenerManager.unregister(queries)
       sc.removeSparkListener(listener)
     }
   }
+
+  /** The DataSource V2 scan nodes of a plan, looking inside adaptive
+    * plans, subqueries and the plans of cached relations.
+    */
+  private def sourceScans(plan: SparkPlan): Seq[BatchScanExec] =
+    collectWithSubqueries(plan) {
+      case b: BatchScanExec => Seq(b)
+      case m: InMemoryTableScanExec => sourceScans(m.relation.cachedPlan)
+    }.flatten
 }

@@ -81,4 +81,38 @@ class CatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM my_second_dbt_model").collect()
       .map(_.getInt(0)).toSeq == Seq(1))
   }
+
+  test("a read of dev.<t> after repointIfRegistered sees the new snapshot, cached or not") {
+    val payloads = Files.createTempDirectory("catsrc3").toFile
+    val wh = Files.createTempDirectory("catwh3").toFile.getAbsolutePath
+    val t = Dv3fConfig.departement
+    // a commit that does not re-point the catalog by itself
+    def commit(nbtrans: Double): Unit = {
+      Files.writeString(new java.io.File(payloads, "departement_85.json").toPath,
+        s"""{"count":1,"next":null,"previous":null,"results":[
+           |{"annee":"2019","dep":"85","libdep":"V","nbtrans_cod111":$nbtrans}]}""".stripMargin)
+      Upsert.upsertByName(spark, s"$wh/${t.name}", graft.sources.Dv3fSource.staged(
+        spark.read.format("dv3f").option("path", payloads.getAbsolutePath), t), t)
+    }
+    def read(): Seq[Long] =
+      spark.sql(s"SELECT nbtrans FROM dev.${t.name}").collect().map(_.getLong(0)).toSeq
+    commit(1.0)
+    Catalog.ensureStagingTable(spark, wh, t) // a no-op if an earlier test registered it
+    Catalog.repointIfRegistered(spark, wh, t)
+    assert(read() == Seq(1L))
+    // one SQL statement per re-point: the ALTER refreshes the table itself
+    commit(2.0)
+    val (_, counts) = graft.Listened(spark)(Catalog.repointIfRegistered(spark, wh, t))
+    assert(counts.actions == 1, counts)
+    assert(read() == Seq(2L))
+    // and a cached table is re-cached from the new snapshot
+    spark.catalog.cacheTable(s"dev.${t.name}")
+    try {
+      assert(read() == Seq(2L))
+      commit(3.0)
+      assert(read() == Seq(2L)) // the catalog still names the old snapshot
+      Catalog.repointIfRegistered(spark, wh, t)
+      assert(read() == Seq(3L))
+    } finally spark.catalog.uncacheTable(s"dev.${t.name}")
+  }
 }

@@ -5,11 +5,18 @@ import java.nio.file.Files
 
 import scala.collection.JavaConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
-import graft.dv3f.{Dv3fConfig, IngestJob, RunLog}
+import graft.dv3f.{Dv3fConfig, IngestJob, Reshape, RunLog, StagingTable}
 import graft.queries.Dv3fQueries
 
-class Dv3fSourceSpec extends SparkSpec {
+class Dv3fSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def writePayload(dir: File, scope: String, code: String,
       results: String): Unit =
@@ -23,10 +30,54 @@ class Dv3fSourceSpec extends SparkSpec {
   private def plannedPairs(scan: Dv3fScan): Seq[(String, String)] =
     scan.planInputPartitions().toSeq.flatMap(_.asInstanceOf[Dv3fPartition].pairs)
 
-  private def countingSource(dir: File) = spark.read.format("dv3f")
+  private def countingReader(dir: File) = spark.read.format("dv3f")
     .option("path", dir.getAbsolutePath)
     .option("fetcher", classOf[CountingFileFetcher].getName)
-    .load()
+
+  private def countingSource(dir: File) = countingReader(dir).load()
+
+  private def reader(dir: File) = spark.read.format("dv3f").option("path", dir.getAbsolutePath)
+
+  /** The long → splitCod → pivotFirst → withUid chain the staging shape
+    * replaces, kept as its oracle.
+    */
+  private def oracle(long: DataFrame, table: StagingTable): DataFrame = {
+    val renamed = long.filter(col("scope") === table.scope)
+      .select(col("annee"), col("code").as(table.idVars(1)),
+        col("lib").as(table.idVars(2)), col("cod_full"), col("valeur"))
+    Reshape.withUid(Reshape.pivotFirst(Reshape.splitCod(renamed), table), table)
+      .select(table.schema.fieldNames.map(col): _*)
+  }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+
+  /** Payloads that exercise every pivot rule: departement 85 spans two
+    * pages (annee 2019 on both), with null, non-numeric and undeclared
+    * metrics, a field name with no `_`, a `cod` inside a code, a null
+    * libdep and an all-null object; departement 17 and region 52 are
+    * single pages, region 52 with one group given twice.
+    */
+  private def pivotFixture(): File = {
+    val dir = Files.createTempDirectory("dv3fpivot").toFile
+    new File(dir, "pages").mkdirs()
+    Files.writeString(new File(dir, "departement_85.json").toPath,
+      """{"count":5,"next":"pages/departement_85_2.json","previous":null,"results":[
+        |{"annee":"2019","dep":"85","libdep":"V","nbtrans_cod111":null,"pxm2_median_cod111":1.5,
+        | "valeurfonc_sum_cod111":"n/a","sbati_sum_cod111":{"x":1}},
+        |{"annee":"2020","dep":"85","libdep":"V","nbtrans_cod111":3.0,"foo_cod9":4.0,
+        | "weird":5.0,"nbtrans_cod1cod2":6.0,"pxm2_q25_cod121":null}]}""".stripMargin)
+    Files.writeString(new File(dir, "pages/departement_85_2.json").toPath,
+      """{"count":5,"next":null,"previous":"departement_85.json","results":[
+        |{"annee":"2019","dep":"85","libdep":"V","nbtrans_cod111":7.0,"pxm2_median_cod111":2.5},
+        |{"annee":"2021","dep":"85","libdep":null,"nbtrans_cod111":8.0},
+        |{"annee":"2022","dep":"85","libdep":"V","nbtrans_cod131":null}]}""".stripMargin)
+    writePayload(dir, "departement", "17",
+      """{"annee":"2019","dep":"17","libdep":"C","nbtrans_cod111":1.0,"sbati_median_cod121":2.0}""")
+    writePayload(dir, "region", "52",
+      """{"annee":"2019","reg":"52","libreg":"P","nbtrans_cod111":9.0,"valeurfonc_sum_cod111":5.5},
+        |{"annee":"2019","reg":"52","libreg":"P","nbtrans_cod111":10.0}""".stripMargin)
+    dir
+  }
 
   test("format(\"dv3f\") resolves via DataSourceRegister; one partition per (scope, code)") {
     val dir = Files.createTempDirectory("dv3fsrc").toFile
@@ -350,7 +401,7 @@ class Dv3fSourceSpec extends SparkSpec {
     // runViaSource's own body, over a source whose fetcher counts
     for (_ <- 1 to 2) {
       CountingFileFetcher.reset()
-      val reports = IngestJob.loadStaging(spark, countingSource(dir), wh)
+      val reports = IngestJob.loadStaging(spark, countingReader(dir), wh)
       assert(reports.forall(_.ok) && reports.map(_.rows).sum == 3)
       // one first-page fetch per payload file, whatever the task count
       assert(CountingFileFetcher.fetchedKeys.sorted ==
@@ -466,7 +517,7 @@ class Dv3fSourceSpec extends SparkSpec {
     sc.addSparkListener(listener)
     sc.setLocalProperty(CountingFileFetcher.CallerKey, caller)
     val reports = try {
-      val r = IngestJob.loadStaging(spark, countingSource(dir), wh)
+      val r = IngestJob.loadStaging(spark, countingReader(dir), wh)
       org.apache.spark.SpecListenerBus.drain(sc)
       r
     } finally {
@@ -491,9 +542,9 @@ class Dv3fSourceSpec extends SparkSpec {
     writePayload(dir, "region", "52",
       """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0}""")
     // departement's fetch is slowed, so region finishes first
-    val longDf = spark.read.format("dv3f").option("path", dir.getAbsolutePath)
-      .option("fetcher", classOf[SlowDepartementFetcher].getName).load()
-    val reports = IngestJob.loadStaging(spark, longDf, wh)
+    val slow = spark.read.format("dv3f").option("path", dir.getAbsolutePath)
+      .option("fetcher", classOf[SlowDepartementFetcher].getName)
+    val reports = IngestJob.loadStaging(spark, slow, wh)
     assert(reports.map(r => (r.scope, r.ok)) == Seq(("departement", false), ("region", true)))
     val lines = scala.io.Source.fromFile(logFile).getLines().filter(_.contains("scope=")).toSeq
     assert(lines.size == 2, lines)
@@ -591,12 +642,146 @@ class Dv3fSourceSpec extends SparkSpec {
     val dir = Files.createTempDirectory("dv3fsrc5").toFile
     writePayload(dir, "region", "52",
       """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0,"valeurfonc_sum_cod111":5.5}""")
-    val df = spark.read.format("dv3f").option("path", dir.getAbsolutePath).load()
-    val staged = Dv3fSource.stage(df, Dv3fConfig.region).collect()
+    val staged = Dv3fSource.staged(reader(dir), Dv3fConfig.region).collect()
     assert(staged.length == 1)
     val r = staged(0)
     assert(r.getAs[String]("reg") == "52" && r.getAs[String]("libreg") == "PdL" &&
       r.getAs[Long]("nbtrans") == 9L && r.getAs[Double]("valeurfonc_sum") == 5.5)
+  }
+
+  test("staging shape equals the long → split → pivot → uid chain, both scopes") {
+    val dir = pivotFixture()
+    val long = reader(dir).load()
+    for (table <- Dv3fConfig.staging) {
+      val got = rows(Dv3fSource.staged(reader(dir), table))
+      assert(got.sortBy(_.mkString) == rows(oracle(long, table)).sortBy(_.mkString))
+    }
+    val dep = Dv3fSource.staged(reader(dir), Dv3fConfig.departement)
+      .select("annee", "dep", "libdep", "cod", "nbtrans", "pxm2_median", "valeurfonc_sum", "sbati_sum")
+      .collect().map(r => r.toSeq.take(4).mkString("|") -> r.toSeq.drop(4)).toMap
+    // 85: nothing from the all-null 2022 object or the null-only cod 121
+    assert(dep.keySet == Set("2019|85|V|111", "2020|85|V|111", "2020|85|V|9",
+      "2020|85|V|", "2020|85|V|12", "2021|85|null|111", "2019|17|C|111", "2019|17|C|121"))
+    // the first non-null value in page order: nbtrans from page 2,
+    // pxm2_median from page 1; the string and the object are skipped
+    assert(dep("2019|85|V|111") == Seq(7L, 1.5, null, null))
+    // undeclared metric and '_'-less name form all-null groups
+    assert(dep("2020|85|V|9") == Seq(null, null, null, null))
+    assert(dep("2020|85|V|") == Seq(null, null, null, null))
+    assert(dep("2020|85|V|12") == Seq(6L, null, null, null))
+    assert(dep("2021|85|null|111") == Seq(8L, null, null, null))
+    val reg = rows(Dv3fSource.staged(reader(dir), Dv3fConfig.region)
+      .select("reg", "cod", "nbtrans", "valeurfonc_sum"))
+    assert(reg == Seq(Seq("52", "111", 9L, 5.5)))
+  }
+
+  test("staging shape under pushed filters, runtime filters and pruned columns") {
+    import org.apache.spark.sql.functions.broadcast
+    import spark.implicits._
+    val dir = pivotFixture()
+    val dep = Dv3fConfig.departement
+    val staged = Dv3fSource.staged(countingReader(dir), dep)
+    val want = oracle(reader(dir).load(), dep)
+    def same(a: DataFrame, b: DataFrame): Unit =
+      assert(rows(a).sortBy(_.mkString) == rows(b).sortBy(_.mkString))
+
+    // pushed scope and code equality: only departement 85 is fetched
+    val one = staged.filter(col("dep") === "85")
+    val desc = one.queryExecution.executedPlan.toString
+    assert(desc.contains("scope=departement") && desc.contains("code=85"), desc)
+    CountingFileFetcher.reset()
+    same(one, want.filter(col("dep") === "85"))
+    assert(CountingFileFetcher.fetchedKeys == Seq("departement:85", "pages/departement_85_2.json"))
+
+    // runtime filter from a broadcast dimension join on the code
+    val dimPath = Files.createTempDirectory("dv3fpivotdim").toFile.getAbsolutePath
+    Seq(("17", 1), ("85", 0)).toDF("want_code", "keep").write.mode("overwrite").parquet(dimPath)
+    val dim = spark.read.parquet(dimPath).filter($"keep" === 1).select("want_code")
+    def joined(df: DataFrame) = df.join(broadcast(dim), df("dep") === dim("want_code")).drop("want_code")
+    val j = joined(staged)
+    assert(j.queryExecution.executedPlan.toString.contains("dynamicpruningexpression("),
+      j.queryExecution.executedPlan.toString)
+    CountingFileFetcher.reset()
+    same(j, joined(want))
+    assert(CountingFileFetcher.fetchedKeys == Seq("departement:17"))
+
+    // pruned metric columns reach the reader and leave the groups alone
+    val cols = Seq("uid", "annee", "dep", "cod", "pxm2_median")
+    val pruned = staged.select(cols.map(col): _*)
+    val scan = pruned.queryExecution.executedPlan.toString
+    assert(scan.contains("columns=[scope, code, annee, cod, pxm2_median]"), scan)
+    same(pruned, want.select(cols.map(col): _*))
+    assert(staged.select("sbati_median").count() == want.count())
+    assert(staged.count() == 8)
+  }
+
+  test("the staged batch is cached with no exchange below it") {
+    val dir = pivotFixture()
+    def exchangesBelowCache(df: DataFrame): Int = {
+      val cached = df.persist()
+      try {
+        cached.count()
+        collect(cached.queryExecution.executedPlan) {
+          case m: InMemoryTableScanExec => collect(m.relation.cachedPlan) { case e: Exchange => e }.size
+        }.sum
+      } finally cached.unpersist()
+    }
+    assert(exchangesBelowCache(Dv3fSource.staged(reader(dir), Dv3fConfig.departement)) == 0)
+    // the long-row chain it replaces shuffles
+    assert(exchangesBelowCache(oracle(reader(dir).load(), Dv3fConfig.departement)) > 0)
+  }
+
+  test("the staging shape declines limit and aggregate pushdown") {
+    import org.apache.spark.sql.functions.{count, lit}
+    val dir = pivotFixture()
+    val staged = Dv3fSource.staged(reader(dir), Dv3fConfig.departement)
+    val limited = staged.limit(1)
+    assert(!limited.queryExecution.executedPlan.toString.contains("limit="))
+    assert(limited.collect().length == 1)
+    val agg = staged.groupBy("annee").agg(count(lit(1)))
+    assert(!agg.queryExecution.executedPlan.toString.contains("agg=["))
+    assert(agg.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("2019" -> 3L, "2020" -> 4L, "2021" -> 1L))
+  }
+
+  test("a malformed later page fails only its own table") {
+    val dir = pivotFixture()
+    val wh = Files.createTempDirectory("dv3fwhpivot").toFile.getAbsolutePath
+    Files.writeString(new File(dir, "pages/departement_85_2.json").toPath,
+      """{"count":5,"next":null,"results":[]}""")
+    val reports = IngestJob.runViaSource(spark, dir.getAbsolutePath, wh)
+    assert(reports.map(r => (r.scope, r.ok)) == Seq(("departement", false), ("region", true)))
+    assert(reports.head.error.get.contains("empty or malformed payload for (departement, 85)"))
+    assert(graft.dv3f.Upsert.read(spark, s"$wh/src_region").count() == 1)
+    assert(!new File(s"$wh/src_departement").exists())
+  }
+
+  test("a schema that is neither the long nor the staging shape is refused") {
+    val dir = pivotFixture()
+    val staging = Dv3fSource.stagingSchema(Dv3fConfig.departement)
+    val bad = Seq(
+      StructType(staging.fields.filterNot(_.name == "cod")),
+      StructType(staging.fields.map(f => if (f.name == "nbtrans") f.copy(dataType = LongType) else f)),
+      StructType(staging.fields.take(5).reverse ++ staging.fields.drop(5)),
+      staging.add("note", StringType),
+      staging.add("nbtrans", DoubleType),
+      Dv3fSource.schema.add("extra", DoubleType))
+    for (s <- bad) {
+      val e = intercept[IllegalArgumentException](reader(dir).schema(s).load())
+      assert(e.getMessage.contains("unsupported schema"), e.getMessage)
+    }
+    // the long shape, given explicitly, reads as with no schema
+    assert(reader(dir).schema(Dv3fSource.schema).load().count() == reader(dir).load().count())
+  }
+
+  test("a pair named twice in the scopes option is planned and staged once") {
+    val dir = pivotFixture()
+    val scopes = "departement:85,region:52,departement:85"
+    val scan = new Dv3fScanBuilder(Map("path" -> dir.getAbsolutePath, "scopes" -> scopes))
+      .build().asInstanceOf[Dv3fScan]
+    assert(plannedPairs(scan) == Seq(("departement", "85"), ("region", "52")))
+    val staged = Dv3fSource.staged(reader(dir).option("scopes", scopes), Dv3fConfig.departement)
+    assert(staged.count() == 6 && staged.select("uid").distinct().count() == 6)
   }
 }
 

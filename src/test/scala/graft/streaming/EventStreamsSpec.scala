@@ -212,7 +212,8 @@ class EventStreamsSpec extends SparkSpec {
     val payloads = java.nio.file.Files.createTempDirectory("dv3fonce").toFile
     val wh = java.nio.file.Files.createTempDirectory("dv3foncewh").toString
     val ckpt = java.nio.file.Files.createTempDirectory("dv3fonceck").toString
-    // three metric cells per payload: 6 long source rows in all
+    // three metric cells per payload, folded by the source into two
+    // staged rows (cod 111 and 121): 4 source rows in all
     for ((scope, code) <- Seq(("departement", "85"), ("region", "52")))
       java.nio.file.Files.writeString(
         new java.io.File(payloads, s"${scope}_$code.json").toPath,
@@ -228,7 +229,7 @@ class EventStreamsSpec extends SparkSpec {
     }
     // one read of each payload per micro-batch: no emptiness probe, and
     // the merge's two uses of the batch read the persisted rows
-    assert(counts.sourceRows == 6, counts)
+    assert(counts.sourceRows == 4, counts)
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
     for (t <- Seq("src_departement", "src_region")) // cod 111 and 121
       assert(graft.dv3f.Upsert.read(spark, s"$wh/$t").count() == 2)
