@@ -1,15 +1,20 @@
 package graft
 
-/** EXECUTED-plan audit tool (the AQE-final complement to [[Explain]],
-  * which prints the static plan): `runMain graft.AuditPlan <query> ...`
-  * RUNS each named SparkEntry query against `SPARK_GRAFT_SF_DIR` (any
-  * table dir, including a ScaleBench-amplified one) and prints the
-  * adaptive plan that actually executed, plus the runtime shape
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Plan audit tool: `runMain graft.AuditPlan <query> ...` RUNS each named
+  * SparkEntry query against `SPARK_GRAFT_SF_DIR` (any table dir,
+  * including a ScaleBench-amplified one) and prints the adaptive plan
+  * that actually executed, in `formatted` mode, plus the runtime shape
   * numbers that matter at scale: distinct shuffle exchanges, how many
   * consumers ReuseExchange served, distinct file scans, and shuffle
-  * bytes/records. This is how scale claims get receipts — a static
-  * plan can promise exchange reuse that AQE then breaks at a larger
-  * input (stage-independent replanning), and only the executed plan
+  * bytes/records.
+  *
+  * Checklist per plan: PushedFilters reach the scan, ReadSchema is pruned
+  * to used columns, small dims broadcast, WholeStageCodegen spans are
+  * wide, no unexpected Exchange. Only the executed plan is a receipt at
+  * scale: a static plan can promise exchange reuse that AQE then breaks at
+  * a larger input (stage-independent replanning), and only the final plan
   * shows the broadcast→SMJ flips AQE made.
   */
 object AuditPlan {
@@ -36,8 +41,7 @@ object AuditPlan {
             s"shuffle_mb=${m.shuffleBytesWritten(df) / (1 << 20)} " +
             s"shuffle_records=${m.shuffleRecordsWritten(df)}")
           println("---- executed (AQE-final) plan ----")
-          println(df.queryExecution.executedPlan.toString
-            .split("\n").map(_.take(200)).mkString("\n"))
+          println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
           ops.CacheBin.releaseAll(); spark.catalog.clearCache()
         case None => println(s"unknown query: $name")
       }

@@ -17,49 +17,6 @@ import org.apache.spark.sql.SparkSession
   *   32-core box. At production scale the default is correct.
   */
 object Bench {
-  /** Cells whose per-query spark/duck ratio compares DIFFERENT work and
-    * must not be read as engine-vs-engine on identical inputs — the
-    * declared staged-input / cached-fit / basis-mismatch families of
-    * BASELINE.md (staged indexes and fits are built once per JVM while
-    * the self-contained oracle re-derives every run; binaryfile does
-    * real file-per-object I/O the oracle computes closed-form; the IVM
-    * faces measure the maintain path against an oracle that recomputes
-    * the view from a tiny base). Emitted in BOTH bench JSON lines so
-    * every receipt self-describes.
-    */
-  val stagedInputCells: Seq[String] = Seq(
-    "q_cdc_merge", "q_events_json", "q_binaryfile_scan",
-    "q_ingest_gate_e2e", "q_quality_classifier",
-    "q_bpe_merges", "q_bpe_bytes", "q_bpe_bytes_encode",
-    "q_phrase_search", "q_phrase_search_incr",
-    "q_index_stats",
-    "q_wordpiece_vocab", "q_wordpiece_encode", "q_wordpiece_ids",
-    "q_minpiece_encode", "q_token_blocks",
-    // cached-fit family latecomers (classified round 15): both consume
-    // the per-JVM WordPiece fit while their oracles re-derive the
-    // unrolled fit chain per run — the q_token_blocks asymmetry exactly
-    "q_block_provenance", "q_block_decontam",
-    "q_embed_ann_ivf", "q_embed_ann_ivf_indexed", "q_embed_recall",
-    "q_embed_recall_budget",
-    "q_embed_drift", "q_dedup_semantic", "q_sample_cluster_balanced",
-    "q_embed_ivf_append", "q_embed_ivf_sq8", "q_embed_ivf_sq8_append",
-    "q_embed_ivfpq_append",
-    "q_attribution_stream", "q_ivm_stream", "q_blocklist_stream",
-    "q_para_dedup_stream", "q_para_dedup_incr", "q_ssjoin_stream",
-    "q_ivm_aggregate", "q_ivm_join", "q_ivm_join_dim", "q_ivm_minmax",
-    "q_ivm_minmax_stream",
-    "q_dedup_doc_coverage",
-    "q_trgm_like_scan", "q_trgm_like_incr",
-    "q_ivm_topk", "q_ivm_topk_stream", "q_ivm_distinct", "q_scd2_stream",
-    "q_forget_index", "q_forget_dedup", "q_forget_embed",
-    "q_forget_sigs", "q_forget_winnow", "q_forget_postings",
-    "q_forget_stream",
-    // consumes the per-JVM fitted banding (the sweep + decision rule run
-    // once per corpus dir) while the oracle replays the full sweep per run
-    "q_lsh_fitted_dedup",
-    // staged MemoryStream runs (two-wave kill-and-resume once per JVM)
-    "q_dp_stream", "q_sample_stream")
-
   /** 1-minute load average from /proc/loadavg ("-1" off-Linux). The bench
     * host shows bursty CPU steal; embedding load evidence in the JSON lets
     * a reader tell "this run was measured on a loaded box" apart from a
@@ -156,7 +113,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (ok.nonEmpty) ok.values.map(_.min).sum else 0.0
-    val stagedJson = stagedInputCells.filter(selected.contains)
+    // cells whose spark/duck ratio compares different work (QuerySpec)
+    val stagedJson = SparkEntry.registry
+      .collect { case q if q.stagedInput && selected.contains(q.name) => q.name }
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // A capture taken on a loaded host self-labels: the authoritative
     // ratio is min-of-iterations under 1-minute loadavg < 1 (BASELINE.md

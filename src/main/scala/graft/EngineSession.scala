@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's session factory — one place for every config the engine
-  * needs (used by Bench/Verify/Explain and recommended for users):
+  * needs (used by Bench/Verify/AuditPlan and recommended for users):
   *
   *  - `spark.sql.extensions=graft.GraftExtensions` (SQL access to the
   *    custom expressions);

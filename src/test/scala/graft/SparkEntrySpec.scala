@@ -2,17 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract invariants: every declared query carries a DuckDB
-  * oracle (a missing oracle silently downgrades the driver's check to
-  * rows-only), and every oracle points at a declared query.
+/** Invariants of the query registry: every query carries its DuckDB oracle
+  * by construction (a missing oracle would silently downgrade the result
+  * check to rows-only), so what is left to pin is that no name is declared
+  * twice and that the derived maps drop nothing.
   */
 class SparkEntrySpec extends AnyFunSuite {
 
-  test("queries and oracleSql cover exactly the same names") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries missing an oracle: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
+  test("registry names are unique and both derived maps keep every entry") {
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dups.isEmpty, s"names declared more than once: ${dups.toSeq.sorted}")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+    assert(SparkEntry.oracleSql.size == SparkEntry.registry.size)
   }
 
   test("oracle SQL strings are non-empty and mention a table or literal source") {

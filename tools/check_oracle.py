@@ -70,7 +70,6 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_fail += 1
         else:
             print(f"OK   {name} ({len(g)} rows)")
-    extra = set(oracle) - set(oracle)
     print(f"\n{len(oracle) - n_fail}/{len(oracle)} oracle queries match")
     return 1 if n_fail else 0
 
