@@ -39,11 +39,7 @@ object Bench {
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val b = EngineSession.builder(cpus.toInt, smallInputTuning = true)
       .config("spark.sql.adaptive.enabled", aqe)
-    // ad-hoc config overrides for tuning experiments:
-    //   SPARK_GRAFT_CONF="spark.x=1;spark.y=2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
+    val spark = EngineSession.withConfOverrides(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) =>

@@ -18,6 +18,20 @@ import org.apache.spark.sql.SparkSession
   */
 object EngineSession {
 
+  /** Applies `SPARK_GRAFT_CONF="spark.x=1;spark.y=2"`, the ad-hoc conf
+    * overrides of a tuning experiment, to `b`.
+    */
+  def withConfOverrides(b: SparkSession.Builder): SparkSession.Builder =
+    parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      .foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
+
+  /** `k=v;k=v` (a value may contain `=`); an entry without `=` throws. */
+  private[graft] def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map(kv => kv.split("=", 2) match {
+      case Array(k, v) => k -> v
+      case _ => throw new IllegalArgumentException(s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
+    })
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors,
       smallInputTuning: Boolean = false): SparkSession.Builder = {
     val b = SparkSession.builder()

@@ -196,10 +196,7 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val b = EngineSession.builder(
       Runtime.getRuntime.availableProcessors, smallInputTuning = false)
-    // ad-hoc conf overrides for scale experiments, same contract as Bench
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
+    val spark = EngineSession.withConfOverrides(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
@@ -452,7 +449,7 @@ object ScaleBench {
       // exchanges flat, time ∝ k
       val (stSec, stRows, stEx) = bestIf("session_transcript")(
         queries.Events.sessionTranscript(spark, dir))
-      // WordPiece fit + encode, fit cache BYPASSED (cleared inside the
+      // WordPiece fit + encode, fit memo BYPASSED (forgotten inside the
       // builder, bpe_train convention — the fit's driver top-V collect
       // runs eagerly): replica tags carry digits, so tagged words fall
       // out of the ^[a-z]+$ trained domain — the candidate table, the
@@ -460,7 +457,7 @@ object ScaleBench {
       // the two corpus passes (wc + swc) grow ∝ k. Time ∝ k, output
       // rows flat (per-source rollup), exchanges flat.
       val (wpSec, wpRows, wpEx) = bestIf("wordpiece_encode") {
-        graft.ops.WordPiece.clearFitCache()
+        graft.ops.StageOnce.forget(graft.ops.WordPiece.fitKind)
         graft.ops.WordPiece.encodeStats(spark, dir)
       }
       // WordPiece ids face: MAP-ONLY tokenize-to-model-input (the
@@ -476,7 +473,7 @@ object ScaleBench {
       // kernels are map-side over the one (source, compound) exchange —
       // time ∝ the scan, rows flat (per-source rollup), exchanges flat
       val (mnSec, mnRows, mnEx) = bestIf("minpiece_encode") {
-        graft.ops.WordPiece.clearFitCache()
+        graft.ops.StageOnce.forget(graft.ops.WordPiece.fitKind)
         graft.ops.WordPiece.minEncodeStats(spark, dir)
       }
       // attribution: one user-keyed window exchange, ≤|types|+1 rows
@@ -568,12 +565,12 @@ object ScaleBench {
       // within a replica: rows ∝ k, never k²
       val (lsSec, lsRows, lsEx) = bestIf("longest_span")(
         queries.LlmOps.dedupLongestSpan(spark, dir))
-      // unigram encode: fit + encode per run (cache cleared, the
+      // unigram encode: fit + encode per run (memo forgotten, the
       // wordpiece_encode convention) — tagged compounds fall out of
       // the ^[a-z]+$ domain, so vocabulary/EM work is constant and
       // only the corpus passes grow ∝ k
       val (ueSec, ueRows, ueEx) = bestIf("unigram_encode") {
-        graft.ops.Unigram.clearFitCache()
+        graft.ops.StageOnce.forget(graft.ops.Unigram.fitKind)
         graft.ops.Unigram.encodeStats(spark, dir)
       }
       // blocklist: ONE automaton pass per doc (the multi-pattern win),

@@ -80,9 +80,7 @@ object SkewAudit {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val b = EngineSession.builder(cpus.toInt, smallInputTuning = false)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
+    val spark = EngineSession.withConfOverrides(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val stages = scala.collection.mutable.LinkedHashMap.empty[Int, StageAgg]

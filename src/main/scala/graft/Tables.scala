@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -12,22 +10,6 @@ object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Schema-by-path cache, playing the catalog's role: a real deployment
-    * resolves table schemas from a metastore instead of re-reading
-    * parquet footers on every query, and at 100 TB per-query footer
-    * inference is both latency and an S3 LIST/HEAD storm. Keyed by the
-    * full path; entries live for the JVM (the testdata contract is that
-    * a path's schema is immutable — regenerating data makes a new dir).
-    * CAVEAT: the cached schema reflects the read CONFIG of the first
-    * session that touched the path (e.g. `spark.sql.legacy.parquet
-    * .nanosAsLong` shapes the events `ts` type) — a later same-JVM
-    * session with different read-affecting conf inherits it. All graft
-    * sessions come from EngineSession.builder with identical conf, so
-    * the cache key stays just the path; fold the conf in if that ever
-    * changes.
-    */
-  private val schemaCache = new ConcurrentHashMap[String, StructType]()
 
   // ------------------------------------------------- drift assertions
 
@@ -122,10 +104,16 @@ object Tables {
     schema
   }
 
+  /** The schema is memoized per content version of the table's path
+    * ([[graft.ops.StageOnce.memo]]), playing the metastore's role: no
+    * footer inference per query, and a table regenerated in place is
+    * re-inferred and re-asserted on its next load. All graft sessions
+    * share EngineSession's read conf, so the key leaves the conf out.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => assertShape(name, spark.read.parquet(p).schema))
+    val schema = graft.ops.StageOnce.memo("schema", path)(
+      assertShape(name, spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

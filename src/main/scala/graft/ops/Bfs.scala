@@ -44,6 +44,11 @@ object Bfs {
     * NULL where the seed set is farther than `rounds` hops. Edges must
     * be the canonical (doc_a < doc_b) pair relation; `isSeed` is
     * evaluated against the vertex id column.
+    *
+    * Contract: an UNPINNED lazy plan `rounds` joins deep, for ONE
+    * consumer and a small `rounds` (radii 2-4): every action re-runs
+    * every round (pin it before acting twice), and every round adds
+    * optimizer time and runs even once nothing changes (no early stop).
     */
   def run(edges: DataFrame, isSeed: Column => Column, rounds: Int): DataFrame = {
     val und = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))

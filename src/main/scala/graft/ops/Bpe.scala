@@ -90,7 +90,7 @@ object Bpe {
 
   /** The fit itself, over an explicit (w, c) word-count relation —
     * the spec's entry point for synthetic vocabularies. Fits are
-    * cached per (session, dir) by [[cachedFit]], not here.
+    * memoized per corpus version by [[cachedFit]], not here.
     */
   def trainMerges(wc: DataFrame, merges: Int,
       localThreshold: Int): Seq[Merge] = {
@@ -202,19 +202,13 @@ object Bpe {
     out.result()
   }
 
-  // fit cache, keyed like Similarity's codebook cache: the fit is a
-  // pure function of (corpus dir, merge count), so recomputing it per
-  // query (q_bpe_merges AND q_bpe_encode both need it) would redo the
-  // corpus pass for an identical k-row answer
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
+  // memoized like the IVF codebook: the fit is a pure function of
+  // (corpus version, merge count), so recomputing it per query
+  // (q_bpe_merges AND q_bpe_encode both need it) would redo the corpus
+  // pass for an identical k-row answer
   def cachedFit(spark: SparkSession, dir: String, merges: Int): Seq[Merge] =
-    fitCache.computeIfAbsent((dir, merges),
-      _ => trainMerges(wordCounts(spark, dir), merges, 1 << 18))
-
-  /** Visible for specs that retrain on mutated corpora. */
-  def clearFitCache(): Unit = fitCache.clear()
+    StageOnce.memo("bpe_fit", dir, merges)(
+      trainMerges(wordCounts(spark, dir), merges, 1 << 18))
 
   /** The q_bpe_merges face: the trained merge table. */
   def mergesQuery(spark: SparkSession, dir: String, merges: Int = 8): DataFrame = {
@@ -273,12 +267,9 @@ object Bpe {
       merges)
   }
 
-  private val fitBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
   def cachedFitBytes(spark: SparkSession, dir: String, merges: Int): Seq[Merge] =
-    fitBytesCache.computeIfAbsent((dir, merges),
-      _ => trainMergesBytes(byteWordCounts(spark, dir), merges, 1 << 18))
+    StageOnce.memo("bpe_bytes_fit", dir, merges)(
+      trainMergesBytes(byteWordCounts(spark, dir), merges, 1 << 18))
 
   /** The q_bpe_bytes face: the trained byte-level merge table —
     * (rank, a, b, cnt) with a/b hex-coded byte sequences.

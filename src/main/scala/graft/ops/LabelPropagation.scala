@@ -35,6 +35,11 @@ object LabelPropagation {
     * canonical (doc_a < doc_b) pair relation. Initial label = own id;
     * every vertex in the edge list has ≥ 1 neighbor, so the argmax is
     * always defined.
+    *
+    * Contract: an UNPINNED lazy plan `rounds` joins deep, for ONE
+    * consumer and a small `rounds` (the face runs 3): every action
+    * re-runs every round (pin it before acting twice), and every round
+    * adds optimizer time and runs even once labels settle (no early stop).
     */
   def run(edges: DataFrame, rounds: Int): DataFrame = {
     val und = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))

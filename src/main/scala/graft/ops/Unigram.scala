@@ -234,16 +234,11 @@ object Unigram {
     } finally wcw.unpersist(blocking = false)
   }
 
-  // fit cache, keyed like Bpe's: the fit is a pure function of the
-  // corpus dir, and all three faces need it
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Fit]()
-
+  // memoized like Bpe's: the fit is a pure function of the corpus
+  // version, and all three faces need it
   def cachedFit(spark: SparkSession, dir: String): Fit =
-    fitCache.computeIfAbsent(dir, _ => train(spark, dir))
-
-  /** Visible for specs that retrain on mutated corpora. */
-  def clearFitCache(): Unit = fitCache.clear()
+    StageOnce.memo(fitKind, dir)(train(spark, dir))
+  val fitKind = "unigram_fit" // the StageOnce.memo kind of `cachedFit`
 
   /** The q_unigram_fit face: the pruned vocabulary with final usage
     * counts — the model artifact a tokenizer would persist (top-k

@@ -74,11 +74,11 @@ object WordPiece {
       .agg(sum(col("c")).as("weight"))
 
   /** Fit: top-`vocabSize` multi-char pieces by (weight DESC, piece ASC).
-    * Parameter-sized result (collected like a codebook); cached per
-    * (dir, vocabSize) because both faces need the same fit.
+    * Parameter-sized result (collected like a codebook); memoized per
+    * (corpus version, vocabSize) because both faces need the same fit.
     */
   def fit(spark: SparkSession, dir: String, vocabSize: Int): Seq[Piece] =
-    fitCache.computeIfAbsent((dir, vocabSize), _ =>
+    StageOnce.memo(fitKind, dir, vocabSize)(
       candidates(Bpe.wordCounts(spark, dir))
         .withColumn("piece",
           when(col("cont"), concat(lit("##"), col("sub"))).otherwise(col("sub")))
@@ -87,12 +87,7 @@ object WordPiece {
         .collect()
         .map(r => Piece(r.getBoolean(0), r.getString(1), r.getLong(2)))
         .toSeq)
-
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Piece]]()
-
-  /** Visible for specs that retrain on mutated corpora. */
-  def clearFitCache(): Unit = fitCache.clear()
+  val fitKind = "wordpiece_fit" // the StageOnce.memo kind of `fit`
 
   /** The q_wordpiece_vocab face: the top-k learned multi-char pieces
     * with their selection weights — the artifact a tokenizer would

@@ -13,17 +13,15 @@ import org.apache.spark.sql.functions._
   * must survive the format's own serialization (CSV quoting, JDBC type
   * mapping), not just the happy path of an already-clean file.
   *
-  * The export side is STAGED ONCE per JVM (`stageOnce`): the first
-  * invocation pays the write, every later invocation — e.g. bench
-  * iterations 2..n — only reads, so the reported time measures the scan,
-  * not a write+read round trip billed as "scan". Staging paths embed the
-  * JVM pid, so two sessions on one host never race on a shared tmp dir.
+  * The export side is STAGED ONCE per JVM and source version
+  * ([[graft.ops.StageOnce]]): the first invocation pays the write, every
+  * later invocation — e.g. bench iterations 2..n — only reads, so the
+  * reported time measures the scan, not a write+read round trip billed
+  * as "scan".
   */
 object Connectors {
 
-  import graft.ops.StageOnce.{pid, tmp}
-  private def stageOnce(key: String)(write: => Unit): Unit =
-    graft.ops.StageOnce(key)(write)
+  import graft.ops.StageOnce, StageOnce.tmp
 
   private def nationAgg(df: DataFrame): DataFrame =
     df.groupBy(col("n_regionkey"))
@@ -39,7 +37,7 @@ object Connectors {
   def csvScan(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val out = tmp("csv_nation", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       nation.write.mode("overwrite").option("header", "true").csv(out)
     }
     nationAgg(spark.read.format("csv")
@@ -61,7 +59,7 @@ object Connectors {
   def orcScan(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val out = tmp("orc_nation", dir)
-    stageOnce(out) { nation.write.mode("overwrite").orc(out) }
+    StageOnce(out) { nation.write.mode("overwrite").orc(out) }
     nationAgg(spark.read.orc(out))
   }
 
@@ -77,7 +75,7 @@ object Connectors {
   def xmlScan(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val out = tmp("xml_nation", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       nation.write.mode("overwrite")
         .option("rootTag", "nations").option("rowTag", "nation")
         .xml(out)
@@ -97,7 +95,7 @@ object Connectors {
   def jsonScan(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val out = tmp("json_nation", dir)
-    stageOnce(out) { nation.write.mode("overwrite").json(out) }
+    StageOnce(out) { nation.write.mode("overwrite").json(out) }
     nationAgg(spark.read.schema(nation.schema).json(out))
   }
 
@@ -113,7 +111,7 @@ object Connectors {
   def textScan(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val out = tmp("txt_docs", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       // line-oriented staging is only content-preserving for texts with
       // no newline (a '\n' would split one document into two lines and
       // silently diverge content_id/n_tokens from the original) — make
@@ -150,7 +148,7 @@ object Connectors {
     */
   def binaryFilesScan(spark: SparkSession, dir: String): DataFrame = {
     val out = tmp("binfiles", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       new java.io.File(out).mkdirs()
       // one FILE per object is the shape being demonstrated, and it is
       // also the small-files pathology: Hadoop's LocalFileSystem costs
@@ -218,9 +216,9 @@ object Connectors {
   def jdbcScan(spark: SparkSession, dir: String): DataFrame = {
     // keep Derby from dropping a derby.log into the working directory
     System.setProperty("derby.stream.error.field", "java.lang.System.err")
-    val url = s"jdbc:derby:memory:graft_${pid}_${Integer.toHexString(dir.hashCode)};create=true"
+    val url = s"jdbc:derby:memory:${new java.io.File(tmp("jdbc_nation", dir)).getName};create=true"
     val nation = Tables.load(spark, dir, "nation")
-    stageOnce(url) {
+    StageOnce(url) {
       nation.write.mode("overwrite").format("jdbc")
         .option("url", url).option("dbtable", "nation").save()
     }
@@ -260,7 +258,7 @@ object Connectors {
   def dbfScan(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val out = tmp("dbf_nation", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       new java.io.File(out).mkdirs()
       graft.sources.DbfSource.write(nation, s"$out/nation.dbf")
     }
@@ -317,7 +315,7 @@ object Connectors {
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         col("s_acctbal"))
     val out = tmp("avro_supplier", dir)
-    stageOnce(out) {
+    StageOnce(out) {
       new java.io.File(out).mkdirs()
       graft.sources.AvroSource.write(supplier, s"$out/supplier.avro",
         syncIntervalBytes = 1024)

@@ -69,6 +69,18 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("a table rewritten in place with a drifted type fails its next load") {
+    val dir = freshDir()
+    def docs(id: org.apache.spark.sql.Column): DataFrame =
+      Seq((1L, "a b", "en", "s", 3L)).toDF("doc_id", "text", "lang", "source", "n_chars")
+        .withColumn("doc_id", id)
+    writeAs(dir, "documents", docs(col("doc_id")))
+    assert(Tables.load(spark, dir, "documents").count() === 1)
+    writeAs(dir, "documents", docs(col("doc_id").cast("string")))
+    val e = intercept[IllegalStateException](Tables.load(spark, dir, "documents"))
+    assert(e.getMessage.contains("testdata drift: documents.doc_id"), e.getMessage)
+  }
+
   test("temporal drift outside the families fails at load, naming the drift") {
     // o_orderdate arriving as DATE would silently change comparison and
     // grouping semantics — must refuse, not absorb

@@ -164,6 +164,33 @@ class SimilaritySpec extends SparkSpec {
     assert(meanAt(1) >= meanAt(0), "recall is monotone in nProbe")
   }
 
+  test("fittedCentroids: a corpus rewritten in place is refit, not served the old fit") {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val dir = java.nio.file.Files.createTempDirectory("ivf_refit").toString
+    val path = s"$dir/embeddings.parquet"
+    def write(seed: Long): Unit = {
+      val rnd = new scala.util.Random(seed)
+      (0L until 64L).map(i => (i, Seq.fill(4)(rnd.nextGaussian().toFloat), 0L))
+        .toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }
+    def freshFit(): Seq[(Int, Seq[Double])] = {
+      val emb = spark.read.parquet(path)
+      val seeds = emb.filter(col("vec_id") < 8)
+        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)))
+        .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq.sortBy(_._1)
+      Similarity.kmeansFit(emb, col("vec_id"), col("embedding"), seeds,
+        LlmOps.ivfFitIters)
+    }
+    write(1L)
+    val first = LlmOps.fittedCentroids(spark, dir)
+    assert(first === freshFit())
+    write(2L)
+    val second = LlmOps.fittedCentroids(spark, dir)
+    assert(second !== first, "the two generations must fit differently")
+    assert(second === freshFit(), "stale centroids served for a rewritten corpus")
+  }
+
   test("multi-probe budget: prefix-nested probe sets, recall monotone in budget, exact at budget=N") {
     val emb = graft.Tables.load(spark, sf, "embeddings")
     val centroids = Similarity.kmeansFit(emb, col("vec_id"), col("embedding"),

@@ -29,7 +29,6 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("local and distributed EM tiers produce the identical fit") {
-    Unigram.clearFitCache()
     val local = Unigram.train(spark, sf)
     val dist = Unigram.train(spark, sf, localThreshold = 0)
     assert(local.pieces === dist.pieces)

@@ -83,15 +83,12 @@ class WordPieceSpec extends SparkSpec {
     Seq((1L, "banana banana", "en", "s", 13L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    WordPiece.clearFitCache()
-    try {
-      val fit = WordPiece.fit(spark, dir, 1000)
-      val byPiece = fit.map(p => p.display -> p.weight).toMap
-      assert(byPiece("##an") == 4L, s"##an at starts 2,4 x 2 docs: $byPiece")
-      assert(byPiece("ban") == 2L)
-      assert(byPiece("##anana") == 2L) // maxPieceLen 8 admits it
-      assert(!byPiece.contains("an")) // interior substring is never plain
-    } finally WordPiece.clearFitCache()
+    val fit = WordPiece.fit(spark, dir, 1000)
+    val byPiece = fit.map(p => p.display -> p.weight).toMap
+    assert(byPiece("##an") == 4L, s"##an at starts 2,4 x 2 docs: $byPiece")
+    assert(byPiece("ban") == 2L)
+    assert(byPiece("##anana") == 2L) // maxPieceLen 8 admits it
+    assert(!byPiece.contains("an")) // interior substring is never plain
   }
 
   test("encode face: coverage is total and bounds hold per source") {
