@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: per-query wall clock, one JSON line on stdout.
@@ -12,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   *   hardening adds runs: sub-1 s queries get min-of-5, and a min whose
   *   runner-up is >25% away is re-run (≤ SPARK_GRAFT_MAX_EXTRA extras)
   *   until two iterations agree. `SPARK_GRAFT_ITERS=1` skips all of it.
+  * - `compiles_raw` (full line and `target/bench_last.json` only) holds
+  *   each query's Janino compile count per iteration, beside `iters_raw`:
+  *   the min hides what the first iteration paid to compile.
   * - maxPartitionBytes is lowered because the bench inputs are ~1-10 MB
   *   files: the 128 MB default turns every scan into ONE task on a
   *   32-core box. At production scale the default is correct.
@@ -59,9 +63,11 @@ object Bench {
     val corroborateTol = 1.25
     val results = selected.map { case (name, fn) =>
       var failed = false
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       def once(): Double = {
         graft.ops.CacheBin.releaseAll() // drop operator-internal caches
         spark.catalog.clearCache() // no cross-iteration persist reuse
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         // a failing query must not kill the whole bench, but it must be
         // VISIBLE — otherwise its "time" is a fast, misleading success
@@ -70,7 +76,9 @@ object Bench {
             failed = true
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
-        (System.nanoTime() - t0) / 1e9
+        val secs = (System.nanoTime() - t0) / 1e9
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        secs
       }
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       (1 to iters).foreach(_ => times += once())
@@ -91,21 +99,25 @@ object Bench {
           System.err.println(s"[bench] $name min uncorroborated after " +
             s"${times.length} iters: ${times.sorted.take(3).mkString(",")}")
       }
-      name -> (times.toSeq, failed)
+      name -> (times.toSeq, failed, compiles.toSeq)
     }
     val loadAfter = loadavg()
     // A failed query's number is a SENTINEL (-1), never its partial wall
     // clock, and it is excluded from the total — a consumer of the JSON
     // cannot mistake a crash for a fast success.
-    val ok = results.collect { case (k, (v, false)) => k -> v }
-    val failedNames = results.collect { case (k, (_, true)) => k }.toSeq
-    val qs = results.map { case (k, (v, f)) =>
+    val ok = results.collect { case (k, (v, false, _)) => k -> v }
+    val failedNames = results.collect { case (k, (_, true, _)) => k }.toSeq
+    val qs = results.map { case (k, (v, f, _)) =>
       s"\"" + k + "\":" + (if (f) "-1" else v.min.toString)
     }.mkString("{", ",", "}")
     // Raw per-iteration times: lets a reader distinguish host-noise
     // spikes (one bad iter) from a real regression (all iters slow).
-    val raw = results.map { case (k, (v, _)) =>
+    val raw = results.map { case (k, (v, _, _)) =>
       s"\"" + k + "\":" + v.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    // a nonzero entry after the first is a class that did not stay cached
+    val compilesRaw = results.map { case (k, (_, _, c)) =>
+      s"\"" + k + "\":" + c.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (ok.nonEmpty) ok.values.map(_.min).sum else 0.0
@@ -118,7 +130,7 @@ object Bench {
     // provenance section) — a true flag here means "re-measure under a
     // quiet window before reading this as a regression".
     val hotWarn = loadBefore >= 1.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"iters_raw":$raw,"failed":$failedJson,"staged_input_cells":$stagedJson,"sf":"$sfDir","iters":$iters,"agg":"min","loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"hot_window_warn":$hotWarn}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"iters_raw":$raw,"compiles_raw":$compilesRaw,"failed":$failedJson,"staged_input_cells":$stagedJson,"sf":"$sfDir","iters":$iters,"agg":"min","loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"hot_window_warn":$hotWarn}"""
     println(json)
     // The driver's stdout capture keeps only the TAIL of the output, and
     // the full line above (200 queries x raw iteration arrays) overflows

@@ -5,7 +5,9 @@ package graft.ops
   * (tokenizer and index fits, table schemas). The first use pays the
   * write or the compute; later ones — e.g. bench iterations 2..n —
   * reuse it. Paths embed the JVM pid so two sessions on one host never
-  * race on a shared tmp dir.
+  * race on a shared tmp dir, and the JVM deletes its own at exit
+  * (`dropStaged`). A dir regenerated within one JVM still keeps every
+  * superseded generation until then.
   *
   * One staleness rule for both: every entry is keyed by its source
   * dir's `fingerprint`, the absolute path plus a content-version token
@@ -53,6 +55,22 @@ object StageOnce {
   def apply(key: String)(write: => Unit): Unit = synchronized {
     if (!staged.contains(key)) { write; staged += key }
   }
+
+  /** Deletes this JVM's `tmp` dirs under `root` (other pids' stay) and
+    * forgets them, so a later use restages. Runs at JVM exit.
+    */
+  def dropStaged(root: java.io.File = new java.io.File(sys.props("java.io.tmpdir"))): Unit =
+    synchronized {
+      val mine = s"graft_.+_${pid}_[0-9a-f]{16}".r
+      def delete(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(delete)
+        f.delete()
+      }
+      Option(root.listFiles()).getOrElse(Array.empty)
+        .filter(f => mine.matches(f.getName))
+        .foreach { f => delete(f); staged -= f.getAbsolutePath }
+    }
+  sys.addShutdownHook(dropStaged())
 
   /** Computed at most once, by its first reader, under its own lock —
     * not inside `computeIfAbsent`, so a compute may look up other
