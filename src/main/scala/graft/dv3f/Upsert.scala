@@ -1,7 +1,7 @@
 package graft.dv3f
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *     would win max() and silently bury the rival's commit). A writer
   *     stalled so long its slot was vacuumed is caught by the publish
   *     pre-check (chain already past n). Losers throw
-  *     [[CommitRaceException]]; both upsert faces retry internally
+  *     [[CommitRaceException]]; all four write faces retry internally
   *     against the fresh snapshot (idempotent merge ⇒ convergence),
   *     and a private data dir per attempt means a loser's write can
   *     never clobber the winner's published files (its orphan dir is
@@ -57,6 +57,15 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * files directly under targetPath) still read correctly and are
   * treated as the version-0 snapshot by the first versioned commit.
   *
+  * ONE SKELETON PER LAYOUT. The protocol above is written once per
+  * marker layout — `commitWhole` for the unpartitioned `#dir:` marker,
+  * `commitPartitions` for the partitioned `pv=dir` marker — and the
+  * merge once per face (the keyed upsert's left-anti + union, or
+  * [[graft.ops.CdcMerge.applyLatestWins]]). Each public face aligns its
+  * batch, picks its merge and calls its layout's skeleton, which runs
+  * the whole sequence: rename gate, one base resolution, wrong-layout
+  * refusal, flat-root adoption, merge, write, publish, vacuum.
+  *
   * At 100 TB the unpartitioned rewrite is the scaling hazard;
   * mitigations built in:
   *   - [[upsertByNamePartitioned]] rewrites only the partitions present
@@ -70,9 +79,9 @@ import org.apache.spark.sql.types.{StringType, StructType}
   */
 /** A commit lost its optimistic-concurrency race: a rival published
   * first. Retryable — re-reading the snapshot and re-merging converges
-  * (the keyed upsert is idempotent); [[Upsert.upsertByName]] and
-  * [[Upsert.upsertByNamePartitioned]] do so a bounded number of times
-  * before surfacing it. Subclasses IllegalStateException so callers
+  * (the keyed upsert and the CDC merge are idempotent); all four write
+  * faces of [[Upsert]] do so a bounded number of times before
+  * surfacing it. Subclasses IllegalStateException so callers
   * that matched the old contract keep working.
   */
 final class CommitRaceException(msg: String) extends IllegalStateException(msg)
@@ -125,12 +134,15 @@ object Upsert {
   /** Align `df` to the declared schema by name: missing → typed NULL,
     * extra dropped, order fixed (the BY NAME half of INSERT OR REPLACE).
     */
-  def alignByName(df: DataFrame, table: StagingTable): DataFrame = {
+  def alignByName(df: DataFrame, table: StagingTable): DataFrame =
+    df.select(alignedColumns(df, table): _*)
+
+  private def alignedColumns(df: DataFrame, table: StagingTable): Seq[Column] = {
     val present = df.columns.toSet
-    df.select(table.schema.fields.map { f =>
+    table.schema.fields.map { f =>
       if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
+    }.toIndexedSeq
   }
 
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) =
@@ -300,9 +312,12 @@ object Upsert {
     }
   }
 
-  private def parsePartitionCol(content: String): Option[String] =
+  /** The partition column a partitioned marker `n` declares. */
+  private def parsePartitionCol(content: String, targetPath: String, n: Long): String =
     content.linesIterator.find(_.startsWith("#partitionCol:"))
-      .map(_.stripPrefix("#partitionCol:"))
+      .map(_.stripPrefix("#partitionCol:")).getOrElse(
+        throw new IllegalStateException(
+          s"marker $n at $targetPath has no partition column header"))
 
   /** Read the LIVE snapshot of an upsert-managed table. Resolves the
     * commit pointer once; the returned frame only ever touches that
@@ -364,9 +379,7 @@ object Upsert {
           // same contract alignByName gives the merge path.
           if (snap.isEmpty) throw new IllegalStateException(
             s"marker at $targetPath maps no partitions — empty or corrupt commit")
-          val pcol = parsePartitionCol(content).getOrElse(
-            throw new IllegalStateException(
-              s"marker $n at $targetPath has no partition column header"))
+          val pcol = parsePartitionCol(content, targetPath, n)
           snap.groupBy(_._2).map { case (dir, parts) =>
             scanPartitionAsString(spark, dir, pcol)
               .filter(col(pcol).isin(parts.keys.toSeq: _*))
@@ -438,24 +451,6 @@ object Upsert {
   // marker rename to collide — the stale writer throws and retries
   // against the new snapshot.
 
-  /** Dir names (tokens) a marker's snapshot still references. */
-  private def referencedDirNames(fs: FileSystem, target: Path, n: Long): Set[String] = {
-    val content = readMarker(fs, target, n)
-    val lines = content.linesIterator.toSeq
-    lines.find(_.startsWith("#dir:")) match {
-      case Some(d) => Set(d.stripPrefix("#dir:"))
-      case None if content.isEmpty => Set(s"$VPrefix$n") // legacy unpartitioned
-      case None =>
-        lines.filter(l => !l.startsWith("#") && l.contains("=")).map { line =>
-          line.split("=", 2)(1) match {
-            case RootDir | "0" => RootDir
-            case t if t.forall(_.isDigit) => s"$VPrefix$t"
-            case t => t
-          }
-        }.toSet
-    }
-  }
-
   /** Drop snapshots no longer reachable from the last [[keepCommits]]
     * markers: their data dirs and markers are deleted; dirs referenced
     * by a retained marker survive even if written long ago (a partition
@@ -467,8 +462,10 @@ object Upsert {
     val commits = commitNumbers(fs, target).sorted
     if (commits.isEmpty) return
     val keep = commits.takeRight(keepCommits)
-    val referenced: Set[String] =
-      keep.flatMap(n => referencedDirNames(fs, target, n)).toSet
+    // dir names (tokens) the retained markers still reference
+    val root = target.toString
+    val referenced: Set[String] = keep.flatMap(n =>
+      parseSnapshot(readMarker(fs, target, n), root, n).values.map(tokenOf(root, _))).toSet
     commits.dropRight(keepCommits)
       .foreach(n => fs.delete(new Path(target, s"$CPrefix$n"), false))
     // unreferenced data dirs: superseded snapshots and race-losers'
@@ -514,7 +511,7 @@ object Upsert {
 
   /** Run `f`, retrying on [[CommitRaceException]]: the loser's correct
     * move is always "re-read the new snapshot and re-merge" (the keyed
-    * upsert is idempotent), so both upsert faces converge under
+    * upsert is idempotent), so every write face converges under
     * contention instead of surfacing every genuine race to the caller.
     */
   private def withRaceRetry[A](f: => A): A = {
@@ -534,73 +531,10 @@ object Upsert {
     * snapshot ([[raceRetries]]×) before surfacing.
     */
   def upsertByName(spark: SparkSession, targetPath: String,
-      incoming: DataFrame, table: StagingTable): Unit =
-    withRaceRetry(upsertByNameOnce(spark, targetPath, incoming, table))
-
-  private def upsertByNameOnce(spark: SparkSession, targetPath: String,
       incoming: DataFrame, table: StagingTable): Unit = {
     val aligned = alignByName(incoming, table)
-    val key = table.primaryKey
-    val (fs, target) = fsFor(spark, targetPath)
-    // gate BEFORE any data write: on an unsafe FS the flow must die
-    // here, not after shipping a (possibly huge) parquet dir whose
-    // publish is doomed (publish re-checks — this is the cheap exit)
-    requireAtomicRename(fs)
-
-    // base snapshot and commit number resolve from ONE observation; the
-    // published commit is base+1, so a commit landing in between makes
-    // the marker rename collide (see the gapless-chain note above)
-    val baseCommit = currentCommit(fs, target)
-    val existing = readBase(spark, fs, target, targetPath, baseCommit,
-      "use upsertByNamePartitioned/read on it")
-    val merged = existing match {
-      case None => aligned
-      case Some(e) =>
-        // Align the EXISTING side to the declared schema as well: when
-        // the table declaration evolves (the reference's API adds an
-        // indicator column some year), rows written under the old
-        // schema read back NULL in the new column and dropped columns
-        // vanish — the declared schema is the contract, for both sides.
-        // broadcast(new side) => no shuffle of the big target.
-        alignByName(e, table)
-          .join(broadcast(aligned.select(key)), Seq(key), "left_anti")
-          .unionByName(aligned)
-    }
-    commitUnpartitioned(fs, target, targetPath, baseCommit, merged)
-  }
-
-  /** The base snapshot an unpartitioned commit merges onto: the live
-    * commit's dir, the flat pre-protocol layout adopted as version 0,
-    * or nothing for a new table. A partitioned snapshot is refused with
-    * `partitionedHint`.
-    */
-  private def readBase(spark: SparkSession, fs: FileSystem, target: Path,
-      targetPath: String, baseCommit: Option[Long],
-      partitionedHint: String): Option[DataFrame] =
-    baseCommit.map(n =>
-      parseSnapshot(readMarker(fs, target, n), targetPath, n)) match {
-      case Some(snap) => Some(readUnpartitioned(spark, snap.getOrElse("",
-        throw new IllegalStateException(s"$targetPath was committed by the " +
-          s"PARTITIONED upsert; $partitionedHint"))))
-      case None if hasFlatData(fs, target) =>
-        Some(spark.read.parquet(targetPath)) // adopt flat layout as v0
-      case None => None
-    }
-
-  /** Write `merged` as commit base+1 to a fresh writer-unique dir, seed
-    * that dir's [[dirSchemaCache]] entry with the written schema
-    * (parquet reads every field back nullable), publish, vacuum.
-    */
-  private def commitUnpartitioned(fs: FileSystem, target: Path,
-      targetPath: String, baseCommit: Option[Long], merged: DataFrame): Unit = {
-    val n = baseCommit.getOrElse(0L) + 1
-    val dirName = newDataDirName(n)
-    val dir = s"${targetPath.stripSuffix("/")}/$dirName"
-    merged.write.mode(SaveMode.Overwrite).parquet(dir)
-    dirSchemaCache.put(dir,
-      StructType(merged.schema.fields.map(_.copy(nullable = true))))
-    publish(fs, target, n, s"#dir:$dirName")
-    vacuum(fs, target)
+    withRaceRetry(commitWhole(spark, targetPath, table, "upsertByName")(
+      upsertMerge(aligned, table.primaryKey)))
   }
 
   /** Transactional CDC MERGE: apply a change batch (declared columns +
@@ -619,35 +553,26 @@ object Upsert {
     */
   def mergeCdc(spark: SparkSession, targetPath: String,
       changes: DataFrame, table: StagingTable,
-      seqCol: String = "seq", opCol: String = "op"): Unit =
-    withRaceRetry(mergeCdcOnce(spark, targetPath, changes, table, seqCol, opCol))
+      seqCol: String = "seq", opCol: String = "op"): Unit = {
+    val aligned = alignChanges(changes, table, seqCol, opCol, "mergeCdc")
+    withRaceRetry(commitWhole(spark, targetPath, table, "mergeCdc")(
+      cdcMerge(aligned, table, seqCol, opCol)))
+  }
 
-  private def mergeCdcOnce(spark: SparkSession, targetPath: String,
-      changes: DataFrame, table: StagingTable,
-      seqCol: String, opCol: String): Unit = {
-    // align the payload to the declared schema but carry op/seq through
-    val present = changes.columns.toSet
-    require(present(opCol) && present(seqCol),
-      s"mergeCdc: changes must carry '$opCol' and '$seqCol' columns")
-    val alignedChanges = changes.select(
-      (table.schema.fields.map { f =>
-        if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col(opCol), col(seqCol))).toIndexedSeq: _*)
-    val (fs, target) = fsFor(spark, targetPath)
-    requireAtomicRename(fs) // fail before the data write, not after
-
-    val baseCommit = currentCommit(fs, target)
-    val existing = readBase(spark, fs, target, targetPath, baseCommit,
-      "mergeCdc supports unpartitioned tables")
-    val base = existing match {
-      case Some(e) => alignByName(e, table)
-      case None => // empty base with the declared schema: I/U rows insert
-        alignByName(changes.limit(0), table)
-    }
-    val merged = graft.ops.CdcMerge.applyLatestWins(
-      base, alignedChanges, Seq(table.primaryKey), seqCol, opCol)
-    commitUnpartitioned(fs, target, targetPath, baseCommit, merged)
+  /** Partitioned upsert — the 100 TB shape. Only the partitions PRESENT
+    * IN THE BATCH are read (partition-pruned scan), merged (anti-join
+    * on the key) and committed; the marker maps every partition to the
+    * data dir that last wrote it, so untouched partitions are never
+    * read nor written — upsert cost scales with the batch's partition
+    * footprint, not the table size. Readers resolve one marker and see
+    * either the whole previous snapshot or the whole new one.
+    */
+  def upsertByNamePartitioned(spark: SparkSession, targetPath: String,
+      incoming: DataFrame, table: StagingTable, partitionCol: String): Unit = {
+    val aligned = alignByName(incoming, table)
+    withRaceRetry(commitPartitions(spark, targetPath, table,
+      "upsertByNamePartitioned", partitionCol, aligned)(
+      upsertMerge(aligned, table.primaryKey)))
   }
 
   /** Partitioned CDC MERGE — [[mergeCdc]]'s 100 TB shape: only the
@@ -663,96 +588,120 @@ object Upsert {
     */
   def mergeCdcPartitioned(spark: SparkSession, targetPath: String,
       changes: DataFrame, table: StagingTable, partitionCol: String,
-      seqCol: String = "seq", opCol: String = "op"): Unit =
-    withRaceRetry(mergeCdcPartitionedOnce(
-      spark, targetPath, changes, table, partitionCol, seqCol, opCol))
+      seqCol: String = "seq", opCol: String = "op"): Unit = {
+    val aligned = alignChanges(changes, table, seqCol, opCol, "mergeCdcPartitioned")
+    withRaceRetry(commitPartitions(spark, targetPath, table,
+      "mergeCdcPartitioned", partitionCol, aligned)(
+      cdcMerge(aligned, table, seqCol, opCol)))
+  }
 
-  private def mergeCdcPartitionedOnce(spark: SparkSession, targetPath: String,
-      changes: DataFrame, table: StagingTable, partitionCol: String,
-      seqCol: String, opCol: String): Unit = {
+  /** The upsert merge: base rows whose key the batch carries give way
+    * to the batch's rows; with no base the batch is the table.
+    * broadcast(new side) => no shuffle of the big target.
+    */
+  private def upsertMerge(batch: DataFrame, key: String)(
+      base: Option[DataFrame]): DataFrame =
+    base.fold(batch)(_.join(broadcast(batch.select(key)), Seq(key), "left_anti")
+      .unionByName(batch))
+
+  /** Align a change batch's payload to the declared schema, carrying
+    * `opCol` and `seqCol` through.
+    */
+  private def alignChanges(changes: DataFrame, table: StagingTable,
+      seqCol: String, opCol: String, face: String): DataFrame = {
     val present = changes.columns.toSet
     require(present(opCol) && present(seqCol),
-      s"mergeCdcPartitioned: changes must carry '$opCol' and '$seqCol' columns")
-    val alignedChanges = changes.select(
-      (table.schema.fields.map { f =>
-        if (present(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col(opCol), col(seqCol))).toIndexedSeq: _*)
-    val key = table.primaryKey
+      s"$face: changes must carry '$opCol' and '$seqCol' columns")
+    changes.select(alignedColumns(changes, table) ++ Seq(col(opCol), col(seqCol)): _*)
+  }
+
+  /** The CDC merge, latest-wins per key; with no base the changes
+    * apply to an empty table of the declared schema (I/U rows insert,
+    * D rows are no-ops).
+    */
+  private def cdcMerge(changes: DataFrame, table: StagingTable,
+      seqCol: String, opCol: String)(base: Option[DataFrame]): DataFrame =
+    graft.ops.CdcMerge.applyLatestWins(
+      base.getOrElse(alignByName(changes.limit(0), table)),
+      changes, Seq(table.primaryKey), seqCol, opCol)
+
+  /** Refuse a face run against the other layout's snapshot, naming the
+    * face that fits it (each partitioned face is its unpartitioned
+    * twin's name + `Partitioned`).
+    */
+  private def wrongLayout(targetPath: String, face: String): Nothing = {
+    val (held, fits) =
+      if (face.endsWith("Partitioned")) ("UNPARTITIONED", face.stripSuffix("Partitioned"))
+      else ("PARTITIONED", s"${face}Partitioned")
+    throw new IllegalStateException(
+      s"$face cannot commit onto the $held snapshot at $targetPath; use $fits/read on it")
+  }
+
+  /** The commit protocol for the UNPARTITIONED layout (`#dir:` marker):
+    * resolve the base, `merge` onto it, write the result whole to a
+    * fresh writer-unique dir as commit base+1, publish, vacuum. The
+    * base handed to `merge` is the live snapshot or the adopted flat
+    * root, aligned to the declared schema; None for a new table.
+    */
+  private def commitWhole(spark: SparkSession, targetPath: String,
+      table: StagingTable, face: String)(
+      merge: Option[DataFrame] => DataFrame): Unit = {
     val (fs, target) = fsFor(spark, targetPath)
-    requireAtomicRename(fs) // fail before the data write, not after
+    // gate BEFORE any data write: on an unsafe FS the flow must die
+    // here, not after shipping a (possibly huge) parquet dir whose
+    // publish is doomed (publish re-checks — this is the cheap exit)
+    requireAtomicRename(fs)
 
+    // base snapshot and commit number resolve from ONE observation; the
+    // published commit is base+1, so a commit landing in between makes
+    // the marker rename collide (see the gapless-chain note above)
     val baseCommit = currentCommit(fs, target)
-    val contentOpt = baseCommit.map(n => (n, readMarker(fs, target, n)))
-    val snapOpt = contentOpt.map { case (n, c) => parseSnapshot(c, targetPath, n) }
-    contentOpt.foreach { case (_, content) =>
-      val snap = snapOpt.get
-      if (snap.contains("")) throw new IllegalStateException(
-        s"$targetPath was committed by the UNPARTITIONED upsert; " +
-          "use mergeCdc/read on it")
-      val pc = parsePartitionCol(content).getOrElse(
-        throw new IllegalStateException(
-          s"marker at $targetPath has no partition column header"))
-      require(pc == partitionCol,
-        s"$targetPath is partitioned by '$pc', not '$partitionCol'")
-    }
-    val prev: Map[String, String] = snapOpt.getOrElse(Map.empty)
+    val base = baseCommit.map(n => readUnpartitioned(spark,
+      parseSnapshot(readMarker(fs, target, n), targetPath, n)
+        .getOrElse("", wrongLayout(targetPath, face))))
+      .orElse(Option.when(hasFlatData(fs, target))(
+        spark.read.parquet(targetPath))) // adopt flat layout as v0
+    // Align the EXISTING side to the declared schema as well: when the
+    // table declaration evolves (the reference's API adds an indicator
+    // column some year), rows written under the old schema read back
+    // NULL in the new column and dropped columns vanish — the declared
+    // schema is the contract, for both sides.
+    val merged = merge(base.map(alignByName(_, table)))
 
-    val affectedRaw = alignedChanges.select(partitionCol).distinct().collect()
-    require(!affectedRaw.exists(_.isNullAt(0)),
-      s"mergeCdcPartitioned: batch contains NULL in partition column " +
-        s"'$partitionCol' — every change row must carry its partition")
-    val affected = affectedRaw.map(_.get(0).toString).toSeq
-    require(!affected.contains(""),
-      s"mergeCdcPartitioned: batch contains empty-string in partition " +
-        s"column '$partitionCol'")
-    if (affected.isEmpty) return
-
-    val existingAffected = prev.filter(kv => affected.contains(kv._1))
-      .groupBy(_._2).map { case (dir, parts) =>
-        alignByName(scanPartitionAsString(spark, dir, partitionCol)
-          .filter(col(partitionCol).isin(parts.keys.toSeq: _*)), table)
-      }.reduceOption(_ unionByName _)
-
-    val base = existingAffected.getOrElse(alignByName(changes.limit(0), table))
-    val merged = graft.ops.CdcMerge.applyLatestWins(
-      base, alignedChanges, Seq(key), seqCol, opCol)
     val n = baseCommit.getOrElse(0L) + 1
     val dirName = newDataDirName(n)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-      .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-
-    // deletes can empty a partition: only partitions with surviving
-    // rows stay in the map — a fully-deleted partition vanishes
-    val surviving = merged.select(partitionCol).distinct().collect()
-      .map(_.get(0).toString).toSet
-    val prevTokens = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) }
-    val newMap = (prevTokens -- affected) ++
-      affected.filter(surviving).map(_ -> dirName)
-    val content = s"#partitionCol:$partitionCol\n$EncHeader\n" +
-      newMap.toSeq.sortBy(_._1)
-        .map { case (pv, d) => s"${encodeValue(pv)}=$d" }.mkString("\n")
-    publish(fs, target, n, content)
+    val dir = s"${targetPath.stripSuffix("/")}/$dirName"
+    merged.write.mode(SaveMode.Overwrite).parquet(dir)
+    // seed the dir's schema cache with what was written (parquet reads
+    // every field back nullable), so reading this snapshot runs no job
+    dirSchemaCache.put(dir,
+      StructType(merged.schema.fields.map(_.copy(nullable = true))))
+    publish(fs, target, n, s"#dir:$dirName")
     vacuum(fs, target)
   }
 
-  /** Partitioned upsert — the 100 TB shape. Only the partitions PRESENT
-    * IN THE BATCH are read (partition-pruned scan), merged (anti-join
-    * on the key) and committed; the marker maps every partition to the
-    * data dir that last wrote it, so untouched partitions are never
-    * read nor written — upsert cost scales with the batch's partition
-    * footprint, not the table size. Readers resolve one marker and see
-    * either the whole previous snapshot or the whole new one.
+  /** Values of the `partitionCol=` dirs directly under `dir`. Dir names
+    * carry Hive path-escaping (space → %20 etc.); unescape so the values
+    * compare equal to raw batch values.
     */
-  def upsertByNamePartitioned(spark: SparkSession, targetPath: String,
-      incoming: DataFrame, table: StagingTable, partitionCol: String): Unit =
-    withRaceRetry(
-      upsertByNamePartitionedOnce(spark, targetPath, incoming, table, partitionCol))
+  private def partitionDirValues(fs: FileSystem, dir: Path,
+      partitionCol: String): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$partitionCol="))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(s"$partitionCol=")))
 
-  private def upsertByNamePartitionedOnce(spark: SparkSession, targetPath: String,
-      incoming: DataFrame, table: StagingTable, partitionCol: String): Unit = {
-    val aligned = alignByName(incoming, table)
-    val key = table.primaryKey
+  /** The commit protocol for the PARTITIONED layout (`pv=dir` marker):
+    * resolve the base, read only the partitions `batch` touches, `merge`
+    * onto them, write the result partitioned to a fresh writer-unique
+    * dir as commit base+1, publish the marker that maps every touched
+    * partition to the dir that now holds it, vacuum. The base handed to
+    * `merge` is aligned to the declared schema; None when no touched
+    * partition exists yet.
+    */
+  private def commitPartitions(spark: SparkSession, targetPath: String,
+      table: StagingTable, face: String, partitionCol: String,
+      batch: DataFrame)(merge: Option[DataFrame] => DataFrame): Unit = {
     val (fs, target) = fsFor(spark, targetPath)
     requireAtomicRename(fs) // fail before the data write, not after
 
@@ -761,74 +710,63 @@ object Upsert {
     // column resolve from ONE marker read; the published commit is
     // base+1 (gapless chain).
     val baseCommit = currentCommit(fs, target)
-    val contentOpt = baseCommit.map(n => (n, readMarker(fs, target, n)))
-    val snapOpt = contentOpt.map { case (n, c) => parseSnapshot(c, targetPath, n) }
-    contentOpt.foreach { case (_, content) =>
-      // mirror of the unpartitioned guard: merging a partitioned batch
-      // onto an unpartitioned snapshot would carry its "" key into the
-      // new marker and silently drop every pre-existing row whose
-      // partition value is absent from this batch
-      val snap = snapOpt.get
-      if (snap.contains("")) throw new IllegalStateException(
-        s"$targetPath was committed by the UNPARTITIONED upsert; " +
-          "use upsertByName/read on it")
-      val pc = parsePartitionCol(content).getOrElse(
-        throw new IllegalStateException(
-          s"marker at $targetPath has no partition column header"))
-      require(pc == partitionCol,
-        s"$targetPath is partitioned by '$pc', not '$partitionCol'")
+    val prev: Map[String, String] = baseCommit match {
+      case Some(n) =>
+        val content = readMarker(fs, target, n)
+        val snap = parseSnapshot(content, targetPath, n)
+        // merging a partitioned batch onto an unpartitioned snapshot
+        // would carry its "" key into the new marker and silently drop
+        // every pre-existing row whose partition value is absent from
+        // this batch
+        if (snap.contains("")) wrongLayout(targetPath, face)
+        val pc = parsePartitionCol(content, targetPath, n)
+        require(pc == partitionCol,
+          s"$targetPath is partitioned by '$pc', not '$partitionCol'")
+        snap
+      case None =>
+        partitionDirValues(fs, target, partitionCol).map(_ -> targetPath).toMap
     }
-    val prev: Map[String, String] = snapOpt.getOrElse {
-      if (!fs.exists(target)) Map.empty
-      else fs.listStatus(target).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith(s"$partitionCol="))
-        // dir names carry Hive path-escaping (space → %20 etc.);
-        // unescape so adopted values compare equal to raw batch values
-        .map(n => ExternalCatalogUtils.unescapePathName(
-          n.stripPrefix(s"$partitionCol=")) -> targetPath).toMap
-    }
-    val affectedRaw = aligned.select(partitionCol).distinct().collect()
+
+    val touchedRaw = batch.select(partitionCol).distinct().collect()
     // the marker maps partition VALUES to data dirs — a null value has
     // no stable directory name (Hive's __HIVE_DEFAULT_PARTITION__ is a
     // write-side artifact), so reject it loudly instead of NPE-ing or
     // silently mis-routing rows
-    require(!affectedRaw.exists(_.isNullAt(0)),
-      s"upsertByNamePartitioned: batch contains NULL in partition column " +
+    require(!touchedRaw.exists(_.isNullAt(0)),
+      s"$face: batch contains NULL in partition column " +
         s"'$partitionCol' — partition keys must be non-null")
-    val affected = affectedRaw.map(_.get(0).toString).toSeq
+    val touched = touchedRaw.map(_.get(0).toString).toSet
     // "" is as unroutable as null: partitionBy writes it as the Hive
     // default-partition sentinel (reads back NULL, so the rows turn
     // invisible) and its marker line would parse to the "" key that
     // flags an unpartitioned snapshot
-    require(!affected.contains(""),
-      s"upsertByNamePartitioned: batch contains empty-string in partition " +
+    require(!touched.contains(""),
+      s"$face: batch contains empty-string in partition " +
         s"column '$partitionCol' — partition keys must be non-empty")
-    if (affected.isEmpty) return // empty batch: nothing to commit
+    if (touched.isEmpty) return // empty batch: nothing to commit
 
-    val existingAffected = prev.filter(kv => affected.contains(kv._1))
+    val base = prev.filter(kv => touched(kv._1))
       .groupBy(_._2).map { case (dir, parts) =>
-        // partition-pruned: only the affected partition dirs are read,
+        // partition-pruned: only the touched partition dirs are read,
         // with the partition value taken VERBATIM as string (see
         // scanPartitionAsString) so it compares against the marker's
         // raw keys; alignByName casts back to the declared schema.
         alignByName(scanPartitionAsString(spark, dir, partitionCol)
           .filter(col(partitionCol).isin(parts.keys.toSeq: _*)), table)
       }.reduceOption(_ unionByName _)
+    val merged = merge(base)
 
-    val merged = existingAffected match {
-      case None => aligned
-      case Some(e) =>
-        e.join(broadcast(aligned.select(key)), Seq(key), "left_anti")
-          .unionByName(aligned)
-    }
     val n = baseCommit.getOrElse(0L) + 1
     val dirName = newDataDirName(n)
     merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
       .parquet(s"${targetPath.stripSuffix("/")}/$dirName")
-
-    // prior owners keep their dirs, affected partitions move to this one
+    // untouched partitions keep their dirs; touched ones move to this
+    // commit's dir if it wrote them, and vanish if deletes emptied them.
+    // `written` comes from listing the new dir, not from a second pass
+    // over the merge.
+    val written = partitionDirValues(fs, new Path(target, dirName), partitionCol)
     val prevTokens = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) }
-    val newMap = prevTokens ++ affected.map(_ -> dirName)
+    val newMap = (prevTokens -- touched) ++ written.map(_ -> dirName)
     val content = s"#partitionCol:$partitionCol\n$EncHeader\n" +
       newMap.toSeq.sortBy(_._1)
         .map { case (pv, d) => s"${encodeValue(pv)}=$d" }.mkString("\n")

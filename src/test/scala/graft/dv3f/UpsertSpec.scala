@@ -2,6 +2,7 @@ package graft.dv3f
 
 import graft.{Listened, SparkSpec}
 import graft.queries.Dv3fQueries
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -120,23 +121,33 @@ class UpsertSpec extends SparkSpec {
   test("partitioned: pre-protocol flat layout is adopted as version 0") {
     import spark.implicits._
     val table = Dv3fConfig.departement
-    val dir = java.nio.file.Files.createTempDirectory("upsert_legacy").toString + "/t"
-    // a pre-protocol writer laid the table out flat (partition dirs at
-    // the root, no markers)
-    Seq(("a1", "2019", "85", 1L), ("b1", "2020", "85", 2L))
-      .toDF("uid", "annee", "dep", "nbtrans")
-      .write.partitionBy("annee").parquet(dir)
-    // first versioned commit touches only 2020; 2019 must keep being
-    // served from the adopted root (version 0), merged transparently
-    Upsert.upsertByNamePartitioned(spark, dir,
-      Seq(("b1", "2020", "85", 9L)).toDF("uid", "annee", "dep", "nbtrans"),
-      table, "annee")
-    val got = Upsert.read(spark, dir)
-      .select("uid", "annee", "nbtrans").collect()
-      .map(r => (r.getString(0), r.get(1).toString, r.getLong(2))).toSet
-    assert(got == Set(("a1", "2019", 1L), ("b1", "2020", 9L)))
-    val snap = Upsert.currentSnapshot(spark, dir).get
-    assert(snap("2019") == dir && snap("2020") != dir)
+    // both partitioned faces adopt the flat root; each commits one
+    // update to b1
+    val faces: Seq[(String, (String, DataFrame) => Unit)] = Seq(
+      "upsertByNamePartitioned" -> ((dir, b) =>
+        Upsert.upsertByNamePartitioned(spark, dir, b, table, "annee")),
+      "mergeCdcPartitioned" -> ((dir, b) =>
+        Upsert.mergeCdcPartitioned(spark, dir,
+          b.withColumn("op", lit("U")).withColumn("seq", lit(1L)),
+          table, "annee")))
+    faces.foreach { case (face, commit) =>
+      val dir = java.nio.file.Files.createTempDirectory("upsert_legacy").toString + "/t"
+      // a pre-protocol writer laid the table out flat (partition dirs at
+      // the root, no markers)
+      Seq(("a1", "2019", "85", 1L), ("b1", "2020", "85", 2L), ("b2", "2020", "85", 3L))
+        .toDF("uid", "annee", "dep", "nbtrans")
+        .write.partitionBy("annee").parquet(dir)
+      // first versioned commit touches only 2020; 2019 must keep being
+      // served from the adopted root (version 0), and 2020's untouched
+      // b2 merged in from it transparently
+      commit(dir, Seq(("b1", "2020", "85", 9L)).toDF("uid", "annee", "dep", "nbtrans"))
+      val got = Upsert.read(spark, dir)
+        .select("uid", "annee", "nbtrans").collect()
+        .map(r => (r.getString(0), r.get(1).toString, r.getLong(2))).toSet
+      assert(got == Set(("a1", "2019", 1L), ("b1", "2020", 9L), ("b2", "2020", 3L)), face)
+      val snap = Upsert.currentSnapshot(spark, dir).get
+      assert(snap("2019") == dir && snap("2020") != dir, face)
+    }
   }
 
   test("concurrent reader keeps a consistent snapshot across a commit") {
@@ -439,19 +450,34 @@ class UpsertSpec extends SparkSpec {
 
   test("partitioned upsert onto an UNPARTITIONED table is rejected, not corrupted") {
     import spark.implicits._
+    val table = Dv3fConfig.departement
+    val row = Seq(("z1", "2020", "85", 1L)).toDF("uid", "annee", "dep", "nbtrans")
+    val change = row.withColumn("op", lit("U")).withColumn("seq", lit(1L))
     val dir = freshDir()
-    Upsert.upsertByName(spark, dir, staged, Dv3fConfig.departement)
-    val e = intercept[IllegalStateException] {
-      Upsert.upsertByNamePartitioned(spark, dir,
-        Seq(("z1", "2020", "85", 1L)).toDF("uid", "annee", "dep", "nbtrans"),
-        Dv3fConfig.departement, "annee")
-    }
-    assert(e.getMessage.contains("UNPARTITIONED"))
-    // and with a DIFFERENT partition column than the table's own
+    Upsert.upsertByName(spark, dir, staged, table)
     val pdir = freshDir()
-    Upsert.upsertByNamePartitioned(spark, pdir,
-      Seq(("z1", "2020", "85", 1L)).toDF("uid", "annee", "dep", "nbtrans"),
-      Dv3fConfig.departement, "annee")
+    Upsert.upsertByNamePartitioned(spark, pdir, row, table, "annee")
+    // every face against the OTHER layout's snapshot:
+    // (face, table, layout the table holds, face that fits it, run)
+    val pairings: Seq[(String, String, String, String, () => Unit)] = Seq(
+      ("upsertByNamePartitioned", dir, "UNPARTITIONED", "upsertByName",
+        () => Upsert.upsertByNamePartitioned(spark, dir, row, table, "annee")),
+      ("mergeCdcPartitioned", dir, "UNPARTITIONED", "mergeCdc",
+        () => Upsert.mergeCdcPartitioned(spark, dir, change, table, "annee")),
+      ("upsertByName", pdir, "PARTITIONED", "upsertByNamePartitioned",
+        () => Upsert.upsertByName(spark, pdir, row, table)),
+      ("mergeCdc", pdir, "PARTITIONED", "mergeCdcPartitioned",
+        () => Upsert.mergeCdc(spark, pdir, change, table)))
+    pairings.foreach { case (face, target, held, fits, run) =>
+      val snapBefore = Upsert.currentSnapshot(spark, target)
+      val versionsBefore = Upsert.versions(spark, target)
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(s" $held "), s"$face: $e")
+      assert(e.getMessage.contains(s"use $fits/"), s"$face: $e")
+      assert(Upsert.currentSnapshot(spark, target) == snapBefore, face)
+      assert(Upsert.versions(spark, target) == versionsBefore, face)
+    }
+    // and with a DIFFERENT partition column than the table's own
     intercept[IllegalArgumentException] {
       Upsert.upsertByNamePartitioned(spark, pdir,
         Seq(("z2", "2020", "85", 1L)).toDF("uid", "annee", "dep", "nbtrans"),
@@ -750,6 +776,34 @@ class UpsertSpec extends SparkSpec {
     val live = Upsert.currentSnapshot(spark, dir).get("")
     assert(df.schema == spark.read.parquet(live).schema)
     assert(df.count() === 3)
+  }
+
+  test("each commit face runs a pinned number of Spark actions and jobs") {
+    import spark.implicits._
+    val table = Dv3fConfig.departement
+    def rows(r: (String, String, Long)*) =
+      r.toSeq.toDF("uid", "annee", "nbtrans").withColumn("dep", lit("85"))
+    def changes(df: DataFrame) =
+      df.withColumn("op", lit("U")).withColumn("seq", lit(1L))
+    // (face, commit, actions, job ceiling): the second commit onto a
+    // table the same face seeded. upsertByName is the ingest round's
+    // write. A partitioned commit adds one action, the touched-partition
+    // collect; its marker comes from listing the written dir, not from
+    // a second pass over the merge.
+    val faces: Seq[(String, (String, DataFrame) => Unit, Int, Int)] = Seq(
+      ("upsertByName", (d, b) => Upsert.upsertByName(spark, d, b, table), 1, 2),
+      ("mergeCdc", (d, b) => Upsert.mergeCdc(spark, d, changes(b), table), 1, 4),
+      ("upsertByNamePartitioned", (d, b) =>
+        Upsert.upsertByNamePartitioned(spark, d, b, table, "annee"), 2, 5),
+      ("mergeCdcPartitioned", (d, b) =>
+        Upsert.mergeCdcPartitioned(spark, d, changes(b), table, "annee"), 2, 12))
+    faces.foreach { case (face, commit, actions, maxJobs) =>
+      val dir = freshDir()
+      commit(dir, rows(("a1", "2019", 1L), ("b1", "2020", 2L)))
+      val (_, counts) = Listened(spark)(
+        commit(dir, rows(("b1", "2020", 9L), ("c1", "2021", 3L))))
+      assert(counts.actions == actions && counts.jobs <= maxJobs, s"$face: $counts")
+    }
   }
 
   test("a flat layout rewritten in place reads back its new column") {
