@@ -6,9 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 
 /** JSON payload flattening (S2): the API returns
   * `{count, next, previous, results: [...]}`; the relation is the
@@ -37,7 +35,11 @@ object JsonFlatten {
   * load. [[runViaSource]] is the at-scale shape: the fetch and the
   * melt → split → pivot run on executors inside the DataSource V2 `dv3f`
   * reader, one (scope, code) page chain at a time, so the staged batch
-  * is built with no shuffle; the load is the same.
+  * is built with no shuffle; the load is the same. The load caches and
+  * counts the batch in one Spark job and leaves the output's file count
+  * to the commit's sizing rule ([[Upsert]]), so a merging load runs
+  * three jobs per table: the count, the broadcast of the batch's keys
+  * and the one-task write.
   */
 object IngestJob {
   /** One branch's outcome. `layerMs` holds the wall-clock ms of each
@@ -113,16 +115,17 @@ object IngestJob {
   }
 
   /** Stage → upsert → catalog re-point for one table, computing the
-    * staged batch ONCE: it is persisted before its row count, so the
-    * count and both uses of the batch in the merge (the broadcast key
+    * staged batch ONCE: it is persisted, then materialized and counted
+    * by ONE job over its physical plan (`toRdd.count()`; a
+    * `Dataset.count` would plan a cache stage, a partial-count stage
+    * and a result stage, three jobs under AQE). That job fills the
+    * cache, so both uses of the batch in the merge (the broadcast key
     * side and the union side) read the cached rows instead of each
     * re-running the scan and reshape. The cache lives through any
     * commit-race retries of the upsert and is dropped in a `finally`,
     * also when a layer throws. An empty batch commits nothing. The
-    * upsert reads the batch [[sizedToCache]]: Spark does not coalesce a
-    * cached plan's output, so the batch would otherwise keep
-    * `spark.sql.shuffle.partitions` partitions and a small commit would
-    * write one file per partition. Returns the row count and the
+    * commit sizes its own output ([[Upsert]]'s output-sizing rule), so
+    * a small batch writes one file. Returns the row count and the
     * per-layer ms for the branch's RunLog line; `stage_ms` covers
     * building the batch (a driver-side fetch included) and
     * materializing it.
@@ -132,11 +135,10 @@ object IngestJob {
     val t0 = System.nanoTime()
     val staged = stage.persist()
     try {
-      val n = staged.count()
+      val n = staged.queryExecution.toRdd.count()
       val t1 = System.nanoTime()
       if (n > 0)
-        Upsert.upsertByName(spark, s"$warehouseDir/${table.name}",
-          sizedToCache(spark, staged), table)
+        Upsert.upsertByName(spark, s"$warehouseDir/${table.name}", staged, table)
       val t2 = System.nanoTime()
       if (n > 0) Catalog.repointIfRegistered(spark, warehouseDir, table)
       val t3 = System.nanoTime()
@@ -145,17 +147,6 @@ object IngestJob {
         "refresh_ms" -> ms(t2, t3)))
     } finally staged.unpersist()
   }
-
-  /** A materialized cached batch coalesced to ceil(cached bytes /
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) partitions; the
-    * batch as it is when it is not cached.
-    */
-  private def sizedToCache(spark: SparkSession, cached: DataFrame): DataFrame =
-    spark.sharedState.cacheManager.lookupCachedData(castToImpl(cached)).fold(cached) { c =>
-      val bytes = c.cachedRepresentation.computeStats().sizeInBytes
-      val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      cached.coalesce(((bytes + advisory - 1) / advisory).max(1).toInt)
-    }
 
   /** The branch's report, logged: never throws (D4 error isolation). */
   private def logged(scope: String, code: String)(

@@ -1,6 +1,6 @@
 package graft.dv3f
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks — the dbt `unique` / `not_null` schema tests as
@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * Each returns the VIOLATION count (0 = pass) so callers can assert or
   * report. Both are single-pass aggregations — one shuffle for unique
   * (by the checked column), none for notNull. [[stagingChecks]] fuses
-  * a table's whole suite into ONE aggregation (one Spark action) rather
-  * than one action per check.
+  * a table's whole suite into ONE grouped pass (one Spark action, two
+  * jobs) rather than one action per check: its fold into the violation
+  * counts rides on that pass as observed metrics.
   */
 object Quality {
 
@@ -100,13 +101,16 @@ object Quality {
     * uid hash requires — SURVEY.md §7.4.4), plus the declared maxLength
     * constraints (config.yaml:22: annee maxLength 4).
     *
-    * ONE aggregation answers the whole suite: group by the primary key
+    * ONE grouped pass answers the whole suite: group by the primary key
     * once, counting per group its rows, its NULL id vars and its
-    * over-length values, then fold the groups into one row holding
-    * every violation count. The counts are exactly those of the
-    * single-check functions above: a key group with more than one row
-    * is a unique violation (the NULL-key group is not), and the NULL-key
-    * group's row count is the not_null(pk) violation count.
+    * over-length values. The fold of those groups into every violation
+    * count rides on that pass as observed metrics (an unnamed
+    * `Observation`, unique per call, so concurrent callers never share
+    * a name), run by one `noop` write: one Spark action, two jobs (the
+    * grouping's map stage and its result stage). The counts are exactly
+    * those of the single-check functions above: a key group with more
+    * than one row is a unique violation (the NULL-key group is not), and
+    * the NULL-key group's row count is the not_null(pk) violation count.
     */
   def stagingChecks(df: DataFrame, table: StagingTable): Seq[CheckResult] = {
     val pk = table.primaryKey
@@ -119,14 +123,17 @@ object Quality {
     val groups = df.groupBy(col(pk).as("__pk")).agg(count(lit(1)).as("__n"),
       flags.zip(flagCounts).map { case (f, name) => count(when(f, 1)).as(name) }: _*)
     val total = (c: Column) => coalesce(sum(c), lit(0L))
-    val folded = groups.agg(
-      total(when(col("__pk").isNotNull && col("__n") > 1, 1L)),
-      total(when(col("__pk").isNull, col("__n"))) +:
-        flagCounts.map(c => total(col(c))): _*).head()
+    val folds = (Seq(total(when(col("__pk").isNotNull && col("__n") > 1, 1L)),
+      total(when(col("__pk").isNull, col("__n")))) ++ flagCounts.map(c => total(col(c))))
+      .zipWithIndex.map { case (f, i) => f.as(s"__v$i") }
+    val fold = Observation()
+    groups.observe(fold, folds.head, folds.tail: _*)
+      .write.format("noop").mode(SaveMode.Overwrite).save()
+    val folded = fold.get
     val checks = Seq((pk, "unique"), (pk, "not_null")) ++
       table.idVars.map(_ -> "not_null") ++
       lengths.map { case (c, n) => (c, s"max_length_$n") }
     checks.zipWithIndex.map { case ((c, check), i) =>
-      CheckResult(table.name, c, check, folded.getLong(i)) }
+      CheckResult(table.name, c, check, folded(s"__v$i").asInstanceOf[Long]) }
   }
 }

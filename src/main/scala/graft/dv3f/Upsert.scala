@@ -1,10 +1,11 @@
 package graft.dv3f
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Keyed, name-based upsert — the Spark equivalent of the reference's
   * `INSERT OR REPLACE INTO <t> BY NAME` (reference:
@@ -64,7 +65,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * [[graft.ops.CdcMerge.applyLatestWins]]). Each public face aligns its
   * batch, picks its merge and calls its layout's skeleton, which runs
   * the whole sequence: rename gate, one base resolution, wrong-layout
-  * refusal, flat-root adoption, merge, write, publish, vacuum.
+  * refusal, flat-root adoption, merge, output sizing, write, publish,
+  * vacuum.
+  *
+  * ONE OUTPUT-SIZING RULE. Both skeletons write the merged frame in
+  * ceil(plan bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+  * partitions ([[sizedByBytes]]), so a small commit writes one file in
+  * one task instead of one per base file plus one per batch partition.
   *
   * At 100 TB the unpartitioned rewrite is the scaling hazard;
   * mitigations built in:
@@ -126,6 +133,11 @@ object Upsert {
     * for one commit and wrote only test temp dirs.)
     */
   private val EncHeader = "#enc:url"
+  /** Header of a partitioned marker that maps no partition (a commit
+    * deleted every row): the JSON schema a read of the empty table
+    * returns. `parseSnapshot` skips it like every `#` line.
+    */
+  private val SchemaHeader = "#schema:"
   private def encodeValue(v: String): String =
     java.net.URLEncoder.encode(v, "UTF-8")
   private def decodeValue(v: String): String =
@@ -227,10 +239,11 @@ object Upsert {
     * half-written.
     *
     * FILESYSTEM CONTRACT: this relies on rename being atomic and
-    * failing when the destination exists — true on HDFS and local
-    * filesystems (verified: rename-onto-existing returns false here),
-    * NOT on object stores (S3A rename is copy+delete and its existence
-    * check is not atomic with it). [[requireAtomicRename]] enforces the
+    * failing when the destination exists — true on HDFS, and on local
+    * filesystems through [[renameNoReplace]]'s hard link (their plain
+    * rename REPLACES an existing marker), NOT on object stores (S3A
+    * rename is copy+delete and its existence check is not atomic with
+    * it). [[requireAtomicRename]] enforces the
     * contract at every publish: known object-store schemes fail fast
     * with the remediation (conditional-create puts or a lakehouse
     * format), unknown schemes need the documented opt-in conf.
@@ -250,18 +263,40 @@ object Upsert {
     val tmp = new Path(target, s".commit_tmp_${java.util.UUID.randomUUID}")
     val out = fs.create(tmp, false)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new Path(target, s"$CPrefix$n"))) {
+    if (!renameNoReplace(fs, tmp, new Path(target, s"$CPrefix$n"))) {
       fs.delete(tmp, false)
       throw new CommitRaceException(
         s"commit $n at $target lost a race with a concurrent writer")
     }
   }
 
+  /** Names directly under `dir` that Spark's file listing sees: the
+    * `_`/`.`-prefixed protocol and bookkeeping entries are hidden.
+    */
+  private def visibleNames(fs: FileSystem, dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  /** Rename `src` to `dst`, returning false when `dst` exists, the check
+    * atomic with the move. Hadoop's local filesystem renames with
+    * rename(2), which silently REPLACES an existing file, so two writers
+    * past the publish pre-check could both "win" a commit number; there
+    * the move is a hard link (link(2) fails when the name exists), then
+    * the temp name is dropped. Other schemes rename: HDFS's fails on an
+    * existing destination, and [[requireAtomicRename]] admits no other.
+    */
+  private[dv3f] def renameNoReplace(fs: FileSystem, src: Path, dst: Path): Boolean =
+    if (fs.getUri.getScheme != "file") fs.rename(src, dst)
+    else try {
+      java.nio.file.Files.createLink(java.nio.file.Paths.get(fs.makeQualified(dst).toUri),
+        java.nio.file.Paths.get(fs.makeQualified(src).toUri))
+      fs.delete(src, false) // the marker is published: a stray temp is vacuumed later
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+
   private def hasFlatData(fs: FileSystem, target: Path): Boolean =
-    fs.exists(target) && fs.listStatus(target).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    visibleNames(fs, target).nonEmpty
 
   /** Resolve a marker's dir token to a full path. Tokens: `.` = the
     * pre-protocol flat root; a bare number = legacy `_v_<n>` layout
@@ -377,16 +412,28 @@ object Upsert {
           // a snapshot from before a schema evolution) may carry fewer
           // columns than newer commits — those read back as NULL, the
           // same contract alignByName gives the merge path.
-          if (snap.isEmpty) throw new IllegalStateException(
-            s"marker at $targetPath maps no partitions — empty or corrupt commit")
-          val pcol = parsePartitionCol(content, targetPath, n)
-          snap.groupBy(_._2).map { case (dir, parts) =>
-            scanPartitionAsString(spark, dir, pcol)
-              .filter(col(pcol).isin(parts.keys.toSeq: _*))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
+          if (snap.isEmpty) emptyTable(spark, content).getOrElse(
+            throw new IllegalStateException(
+              s"marker at $targetPath maps no partitions — empty or corrupt commit"))
+          else {
+            val pcol = parsePartitionCol(content, targetPath, n)
+            snap.groupBy(_._2).map { case (dir, parts) =>
+              scanPartitionAsString(spark, dir, pcol)
+                .filter(col(pcol).isin(parts.keys.toSeq: _*))
+            }.reduce(_.unionByName(_, allowMissingColumns = true))
+          }
         }
     }
   }
+
+  /** The zero-row table a marker's [[SchemaHeader]] line declares; None
+    * when the marker has no such line.
+    */
+  private def emptyTable(spark: SparkSession, content: String): Option[DataFrame] =
+    content.linesIterator.find(_.startsWith(SchemaHeader)).map { l =>
+      val schema = DataType.fromJson(l.stripPrefix(SchemaHeader)).asInstanceOf[StructType]
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    }
 
   /** Scan a snapshot dir with the partition column pinned to STRING in
     * a user-supplied schema, so the directory value is taken VERBATIM
@@ -637,11 +684,30 @@ object Upsert {
       s"$face cannot commit onto the $held snapshot at $targetPath; use $fits/read on it")
   }
 
+  /** The output-sizing rule of both commit skeletons: `merged` coalesced
+    * to ceil(plan bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+    * partitions. The plan bytes are the statistics of the plan with
+    * cached data substituted (a cached batch counts its materialized
+    * bytes), which needs no second optimizer pass. When they are
+    * unknown (the default size) or would ask for more partitions than
+    * an Int holds, `merged` is written as it is; a count above the
+    * plan's own partitions leaves them as they are.
+    */
+  private def sizedByBytes(spark: SparkSession, merged: DataFrame): DataFrame = {
+    val conf = spark.sessionState.conf
+    val bytes = merged.queryExecution.withCachedData.stats.sizeInBytes
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = ((bytes + advisory - 1) / advisory).max(1)
+    if (bytes >= conf.defaultSizeInBytes || !parts.isValidInt) merged
+    else merged.coalesce(parts.toInt)
+  }
+
   /** The commit protocol for the UNPARTITIONED layout (`#dir:` marker):
-    * resolve the base, `merge` onto it, write the result whole to a
-    * fresh writer-unique dir as commit base+1, publish, vacuum. The
-    * base handed to `merge` is the live snapshot or the adopted flat
-    * root, aligned to the declared schema; None for a new table.
+    * resolve the base, `merge` onto it, size the result by its bytes
+    * ([[sizedByBytes]]), write it whole to a fresh writer-unique dir as
+    * commit base+1, publish, vacuum. The base handed to `merge` is the
+    * live snapshot or the adopted flat root, aligned to the declared
+    * schema; None for a new table.
     */
   private def commitWhole(spark: SparkSession, targetPath: String,
       table: StagingTable, face: String)(
@@ -666,7 +732,7 @@ object Upsert {
     // column some year), rows written under the old schema read back
     // NULL in the new column and dropped columns vanish — the declared
     // schema is the contract, for both sides.
-    val merged = merge(base.map(alignByName(_, table)))
+    val merged = sizedByBytes(spark, merge(base.map(alignByName(_, table))))
 
     val n = baseCommit.getOrElse(0L) + 1
     val dirName = newDataDirName(n)
@@ -686,18 +752,19 @@ object Upsert {
     */
   private def partitionDirValues(fs: FileSystem, dir: Path,
       partitionCol: String): Seq[String] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(s"$partitionCol="))
+    visibleNames(fs, dir).filter(_.startsWith(s"$partitionCol="))
       .map(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix(s"$partitionCol=")))
 
   /** The commit protocol for the PARTITIONED layout (`pv=dir` marker):
     * resolve the base, read only the partitions `batch` touches, `merge`
-    * onto them, write the result partitioned to a fresh writer-unique
-    * dir as commit base+1, publish the marker that maps every touched
-    * partition to the dir that now holds it, vacuum. The base handed to
-    * `merge` is aligned to the declared schema; None when no touched
-    * partition exists yet.
+    * onto them, size the result by its bytes ([[sizedByBytes]]), write
+    * it partitioned to a fresh writer-unique dir as commit base+1,
+    * publish the marker that maps every touched partition to the dir
+    * that now holds it, vacuum. The base handed to `merge` is aligned to
+    * the declared schema; None when no touched partition exists yet. A
+    * flat root is adopted only when it holds nothing but `partitionCol=`
+    * dirs. A commit that leaves no partition records the table's read
+    * schema in its marker ([[SchemaHeader]]), so the table reads empty.
     */
   private def commitPartitions(spark: SparkSession, targetPath: String,
       table: StagingTable, face: String, partitionCol: String,
@@ -724,6 +791,10 @@ object Upsert {
           s"$targetPath is partitioned by '$pc', not '$partitionCol'")
         snap
       case None =>
+        // adopting only the `partitionCol=` dirs of a root that holds
+        // other data (loose files, another column's dirs) would hide it
+        if (visibleNames(fs, target).exists(!_.startsWith(s"$partitionCol=")))
+          wrongLayout(targetPath, face)
         partitionDirValues(fs, target, partitionCol).map(_ -> targetPath).toMap
     }
 
@@ -754,7 +825,7 @@ object Upsert {
         alignByName(scanPartitionAsString(spark, dir, partitionCol)
           .filter(col(partitionCol).isin(parts.keys.toSeq: _*)), table)
       }.reduceOption(_ unionByName _)
-    val merged = merge(base)
+    val merged = sizedByBytes(spark, merge(base))
 
     val n = baseCommit.getOrElse(0L) + 1
     val dirName = newDataDirName(n)
@@ -767,9 +838,14 @@ object Upsert {
     val written = partitionDirValues(fs, new Path(target, dirName), partitionCol)
     val prevTokens = prev.map { case (pv, dir) => pv -> tokenOf(targetPath, dir) }
     val newMap = (prevTokens -- touched) ++ written.map(_ -> dirName)
-    val content = s"#partitionCol:$partitionCol\n$EncHeader\n" +
-      newMap.toSeq.sortBy(_._1)
-        .map { case (pv, d) => s"${encodeValue(pv)}=$d" }.mkString("\n")
+    // an emptied table keeps its schema: the one a read of it returns,
+    // partition column last as string (see readImpl)
+    val emptied = Option.when(newMap.isEmpty)(SchemaHeader + StructType(
+      merged.schema.fields.filter(_.name != partitionCol).map(_.copy(nullable = true)) :+
+        StructField(partitionCol, StringType)).json)
+    val content = (Seq(s"#partitionCol:$partitionCol", EncHeader) ++ emptied ++
+      newMap.toSeq.sortBy(_._1).map { case (pv, d) => s"${encodeValue(pv)}=$d" })
+      .mkString("\n")
     publish(fs, target, n, content)
     vacuum(fs, target)
   }

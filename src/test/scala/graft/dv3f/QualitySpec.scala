@@ -87,6 +87,8 @@ class QualitySpec extends SparkSpec {
       val (got, counts) = Listened(spark)(Quality.stagingChecks(frame, table))
       assert(got == expected)
       assert(counts.actions == 1, counts)
+      // the grouping's map and result stages; the fold is observed on them
+      if (frame eq df) assert(counts.jobs == 2, counts)
     }
   }
 }

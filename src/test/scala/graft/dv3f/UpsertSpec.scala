@@ -288,6 +288,34 @@ class UpsertSpec extends SparkSpec {
     assert(Upsert.currentSnapshot(spark, dir).get.keySet === Set(""))
   }
 
+  test("the marker rename fails on an existing marker, also past the pre-check") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val session = FileSystem.get(new java.net.URI(freshDir()), spark.sparkContext.hadoopConfiguration)
+    // the session's local FS checks for the destination, then renames
+    // (two writers can both pass the check); the raw one renames with
+    // rename(2), which replaces the destination outright
+    Seq(session, FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRawFileSystem)
+      .foreach { fs =>
+        val dir = new Path(freshDir())
+        def temp(content: String) = {
+          val p = new Path(dir, s".commit_tmp_$content")
+          val out = fs.create(p, false)
+          try out.write(content.getBytes("UTF-8")) finally out.close()
+          p
+        }
+        val marker = new Path(dir, "_commit_1")
+        // two writers that both passed the pre-check reach the rename:
+        // the second must lose, not replace the first's marker
+        assert(Upsert.renameNoReplace(fs, temp("winner"), marker), fs)
+        val loser = temp("loser")
+        assert(!Upsert.renameNoReplace(fs, loser, marker), fs)
+        assert(fs.exists(loser), fs)
+        val in = fs.open(marker)
+        try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString == "winner", fs)
+        finally in.close()
+      }
+  }
+
   test("racing DATA writes cannot corrupt the winner: attempts own private dirs") {
     // the pre-fix protocol wrote both attempts to a SHARED _v_<n> dir
     // with Overwrite — the loser's write deleted the winner's published
@@ -446,6 +474,47 @@ class UpsertSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("chain already at 4"))
     assert(!new java.io.File(dir, "_commit_2").exists())
+  }
+
+  test("a partitioned face refuses a flat root holding other data, which stays readable") {
+    import spark.implicits._
+    val table = Dv3fConfig.departement
+    def rows(r: (String, String, Long)*) =
+      r.toSeq.toDF("uid", "annee", "nbtrans").withColumn("dep", lit("85"))
+    // a flat root of loose parquet files, and one partitioned by another
+    // column: adopting only their `annee=` dirs would hide every row
+    Seq[(String, (DataFrame, String) => Unit)](
+      "loose files" -> ((df, d) => df.write.parquet(d)),
+      "dep= dirs" -> ((df, d) => df.write.partitionBy("dep").parquet(d)))
+      .foreach { case (layout, write) =>
+        val dir = freshDir()
+        write(rows(("a1", "2019", 1L), ("b1", "2020", 2L)), dir)
+        val e = intercept[IllegalStateException](
+          Upsert.upsertByNamePartitioned(spark, dir, rows(("c1", "2021", 3L)), table, "annee"))
+        assert(e.getMessage.contains("use upsertByName/"), s"$layout: $e")
+        assert(Upsert.versions(spark, dir).isEmpty, layout)
+        assert(Upsert.read(spark, dir).select("uid").as[String].collect().sorted.toSeq ==
+          Seq("a1", "b1"), layout)
+      }
+  }
+
+  test("a partitioned table emptied by deletes reads back empty; time travel keeps the row") {
+    import spark.implicits._
+    val table = Dv3fConfig.departement
+    val dir = freshDir()
+    val row = Seq(("a1", "2019", 1L)).toDF("uid", "annee", "nbtrans").withColumn("dep", lit("85"))
+    Upsert.upsertByNamePartitioned(spark, dir, row, table, "annee")
+    Upsert.mergeCdcPartitioned(spark, dir,
+      row.withColumn("op", lit("D")).withColumn("seq", lit(1L)), table, "annee")
+    assert(Upsert.currentSnapshot(spark, dir).contains(Map.empty[String, String]))
+    val empty = Upsert.read(spark, dir)
+    assert(empty.count() == 0)
+    assert(empty.columns.toSet == table.schema.fieldNames.toSet)
+    val before = Upsert.readVersion(spark, dir, Upsert.versions(spark, dir).head)
+    assert(before.select("uid").as[String].collect().toSeq == Seq("a1"))
+    // the emptied table takes new rows
+    Upsert.upsertByNamePartitioned(spark, dir, row, table, "annee")
+    assert(Upsert.read(spark, dir).count() == 1)
   }
 
   test("partitioned upsert onto an UNPARTITIONED table is rejected, not corrupted") {
@@ -804,6 +873,19 @@ class UpsertSpec extends SparkSpec {
         commit(dir, rows(("b1", "2020", 9L), ("c1", "2021", 3L))))
       assert(counts.actions == actions && counts.jobs <= maxJobs, s"$face: $counts")
     }
+  }
+
+  test("merging upsertByName commits onto a small table each write one data file") {
+    val dir = freshDir()
+    val table = Dv3fConfig.departement
+    Upsert.upsertByName(spark, dir, staged, table)
+    (1 to 3).foreach { i =>
+      Upsert.upsertByName(spark, dir, staged.withColumn("nbtrans", lit(i.toLong)), table)
+      val live = new java.io.File(Upsert.currentSnapshot(spark, dir).get(""))
+      val files = live.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"commit $i: ${files.mkString(", ")}")
+    }
+    assert(Upsert.read(spark, dir).filter(col("nbtrans") === 3L).count() === 3)
   }
 
   test("a flat layout rewritten in place reads back its new column") {

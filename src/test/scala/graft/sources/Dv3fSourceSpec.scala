@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{Listened, SparkSpec}
 import graft.dv3f.{Dv3fConfig, IngestJob, Reshape, RunLog, StagingTable}
 import graft.queries.Dv3fQueries
 
@@ -414,6 +414,24 @@ class Dv3fSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val reports = IngestJob.runViaSource(spark, dir.getAbsolutePath, wh)
     assert(reports.map(_.ok) == Seq(false, true))
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+  }
+
+  test("a merging loadStaging runs at most 3 Spark jobs per table, scanning the source once") {
+    val dir = Files.createTempDirectory("dv3fjobs").toFile
+    val wh = Files.createTempDirectory("dv3fwhjobs").toFile.getAbsolutePath
+    writePayload(dir, "departement", "85",
+      """{"annee":"2019","dep":"85","libdep":"Vendée","nbtrans_cod111":7.0}""")
+    writePayload(dir, "departement", "44",
+      """{"annee":"2019","dep":"44","libdep":"L-A","nbtrans_cod111":8.0}""")
+    writePayload(dir, "region", "52",
+      """{"annee":"2019","reg":"52","libreg":"PdL","nbtrans_cod111":9.0}""")
+    assert(IngestJob.loadStaging(spark, reader(dir), wh).forall(_.ok)) // creates both tables
+    val (reports, counts) = Listened(spark)(IngestJob.loadStaging(spark, reader(dir), wh))
+    assert(reports.forall(_.ok), reports)
+    // per table: the count that fills the cache, the broadcast of the
+    // batch's keys, the write
+    assert(counts.jobs <= 3 * Dv3fConfig.staging.size, counts)
+    assert(counts.sourceRows == 3, counts)
   }
 
   test("packing: 119 payload files plan at most defaultParallelism partitions, every pair once") {
